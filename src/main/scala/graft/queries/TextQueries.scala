@@ -1018,6 +1018,11 @@ object TextQueries {
         .select(col("doc_id"), col("source"),
           (conv(substring(md5(col("tok")), 1, 2), 16, 10).cast("int"))
             .as("bkt"))
+        // never null (md5's first two hex digits are 0-255), but stated so
+        // the isnotnull(bkt) the weight join infers is on BOTH copies of
+        // cnts: lr's and tot's bucket-count exchanges stay identical and
+        // Spark reuses one for the other instead of re-scanning the corpus
+        .filter(col("bkt").isNotNull)
       val cnts = b.groupBy("bkt").agg(
         count(lit(1)).as("cr"),
         count(when(col("source").isin(target: _*), 1)).as("ct"))
@@ -1081,6 +1086,7 @@ object TextQueries {
         .select(col("doc_id"), col("source"), col("incoming"),
           (conv(substring(md5(col("tok")), 1, 2), 16, 10).cast("int"))
             .as("bkt"))
+        .filter(col("bkt").isNotNull) // exchange reuse, as in tx_dsir_select
       val cnts = b.filter(!col("incoming")).groupBy("bkt").agg(
         count(lit(1)).as("cr"),
         count(when(col("source").isin(target: _*), 1)).as("ct"))
