@@ -215,59 +215,10 @@ object Bench {
     // multi-process cluster mode (round-10 verdict task 1) — see Verify:
     // same env knobs, default stays the driver's local[N] contract
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // never truncate scan metadata in explain strings: the default 100-char
-      // budget is applied to the RAW string, so runs whose expr-ids are wider
-      // truncate where others don't, destabilizing the plan fingerprint
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      // Join strategy (optimization guide §3.1/§9): allow shuffled-hash
-      // joins where the planner's per-partition build-size conditions
-      // hold, and let AQE rewrite sort-merge to shuffled-hash at runtime
-      // under the measured-size threshold below. Round-15 tried reverting
-      // the STATIC half to sort-merge (the ADVICE estimate-risk point;
-      // a 10x A/B on six uncached rows mildly favored it) and the full
-      // board rejected the revert: tracked-cache materialization runs
-      // WITHOUT AQE, so the big cached join subtrees (the co-purchase
-      // lineitem self-join behind 8 graph rows, the LSH band chains) get
-      // only the static choice — with sort-merge forced there, join-heavy
-      // rows regressed ~1-2 s each in the closing record. The estimate
-      // risk remains documented: a skewed/misestimated deployment should
-      // set SPARK_GRAFT_PREFER_SMJ=true (the AQE runtime rewrite, which
-      // decides from measured partition sizes with the 64 MB bound,
-      // stays on either way).
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP_BYTES", "67108864"))
-      // checkpoint-retention floor for the replay parity rows: every
-      // micro-batch otherwise retains 100 batches of offset/commit/state
-      // files — pure metadata I/O the short-lived replay queries never
-      // read back (they never recover from old batches; feedAll then stop)
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      // No-data micro-batches exist to fire watermark-driven work (state
-      // eviction, append-mode finalization) when no new data arrives. On
-      // the replay tier every row except st_stream_session_parity emits
-      // purely on DATA batches (inner stream-stream join emits eagerly;
-      // update/complete-mode aggs and NoTimeout flatMapGroupsWithState
-      // emit nothing on a no-data batch), so these extra batches are pure
-      // state-store commit cost: measured 53.0 -> 12.1 s on
-      // st_stream_join_parity solo (round-15; each no-data batch
-      // re-commits 4 join state stores x 4 partitions). Session-window
-      // parity NEEDS watermark finalization and scope-restores this to
-      // true around its own query. Env-parameterized; results verified
-      // row-identical against the oracle with it off.
-      .config("spark.sql.streaming.noDataMicroBatches.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_NODATA", "false"))
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => b.config("spark.jars", j))
-    sys.env.get("SPARK_GRAFT_EXECUTOR_MEM")
-      .foreach(m => b.config("spark.executor.memory", m))
-    val spark = b.getOrCreate()
+    // batch conf and the graft dialect come from EngineSession; replay
+    // rows scope their streaming conf per query (FileReplay.start)
+    val spark = EngineSession.create(master, cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // full dialect at session build — see Verify (round-13 review)
-    org.apache.spark.sql.graft.GraftOptimizations.install(spark)
     // warm the session (parquet reader, codegen, shuffle machinery) so the
     // first measured query doesn't absorb JVM start-up costs
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
@@ -295,10 +246,9 @@ object Bench {
       graft.operators.TextOps.resetCacheStats()
       val pool = java.util.concurrent.Executors.newFixedThreadPool(concurrency)
       val t0 = System.nanoTime()
-      // replay-harness rows excluded: they scope-set session conf
-      // (shuffle.partitions) as a fixture knob — not a concurrent-stage
-      // shape, and a conf race under contention would measure the race,
-      // not the operators (ConcurrencySpec documents the same exclusion)
+      // replay-harness rows excluded: their time is micro-batch commit
+      // latency of a fixture replay, not a concurrent-stage shape
+      // (ConcurrencySpec documents the same exclusion)
       val futs = selected.toSeq.sortBy(_._1)
         .filterNot { case (n, _) =>
           n.startsWith("st_stream_") || n.startsWith("dd_stream_") }
@@ -393,11 +343,12 @@ object Bench {
     // parity rows cost ~23% of the board, all of it micro-batch commit
     // latency serialized on one thread — harness-bound, not engine-bound
     // (the concurrent board runs the queries themselves at ~8x/8 threads).
-    // Each row runs on a CLONED session (spark.newSession): the rows
-    // scope-set session conf (shuffle.partitions) as a fixture knob, and a
-    // clone isolates that without a conf race; memory-sink temp views and
-    // streaming query names are session-/epoch-scoped; FileReplay's staged
-    // LRU is refcount-pinned against cross-thread eviction.
+    // Each row runs on an isolated child session (EngineSession.isolated,
+    // which keeps the graft rules): memory-sink temp views and streaming
+    // query names are session-/epoch-scoped; each row sets its streaming
+    // conf only while its query starts (FileReplay.start, under one lock);
+    // FileReplay's staged LRU is refcount-pinned against cross-thread
+    // eviction.
     // ReplayConcurrencySpec pins serial-equality of results.
     // Default scales with the core budget instead of pinning the r12
     // constant 4 (the guide's scale-adaptive-settings rule): the tier is
@@ -432,7 +383,7 @@ object Bench {
         name -> pool.submit(
           new java.util.concurrent.Callable[(Double, String)] {
             override def call(): (Double, String) = {
-              val sess = spark.newSession()
+              val sess = EngineSession.isolated(spark)
               def dropViews(): Unit =
                 try sess.catalog.listTables().collect().filter(_.isTemporary)
                   .foreach(t => sess.catalog.dropTempView(t.name))

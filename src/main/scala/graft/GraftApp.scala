@@ -32,12 +32,9 @@ object GraftApp {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("graft")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = EngineSession.create(
+      sys.env.getOrElse("SPARK_MASTER", "local[*]"), 32,
+      "spark.app.name" -> "graft", "spark.ui.enabled" -> "true")
     val (_, server) = boot(spark, args.headOption)
     println(s"graft console listening on port ${server.boundPort}")
     Thread.currentThread().join() // serve until killed

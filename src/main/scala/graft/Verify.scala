@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,37 +14,14 @@ object Verify {
     // contract stays local[N], but SPARK_GRAFT_MASTER can point the same
     // board at e.g. local-cluster[2,16,8192] so broadcast fetch, closure/
     // native-operator serialization and state-store serde cross a real
-    // JVM boundary; SPARK_GRAFT_JARS ships the packaged library to the
-    // executor processes (they don't share the driver's classpath).
+    // JVM boundary.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror Bench's join-strategy tuning (guide §3.1/§9) so the plans
-      // the driver verifies are the plans the bench times; results are
-      // strategy-invariant, the mirror is for plan-evidence fidelity
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP_BYTES", "67108864"))
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      // mirror Bench's replay-tier conf (see Bench.scala): no-data
-      // micro-batches off so the oracle verifies the exact configuration
-      // the bench times; st_stream_session_parity scope-restores true
-      .config("spark.sql.streaming.noDataMicroBatches.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_NODATA", "false"))
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => b.config("spark.jars", j))
-    sys.env.get("SPARK_GRAFT_EXECUTOR_MEM")
-      .foreach(m => b.config("spark.executor.memory", m))
-    val spark = b.getOrCreate()
+    // the same session Bench times (EngineSession): results are
+    // join-strategy-invariant, the shared conf is for plan-evidence
+    // fidelity; replay rows start under the streaming conf Bench's
+    // replay tier uses (FileReplay.start)
+    val spark = EngineSession.create(master, cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // the full graft dialect (pow rewrite + native strategies) installs
-    // at SESSION build: previously the pow rule arrived only as a side
-    // effect of the first as-of/LSH join, making unrelated rows' doubles
-    // depend on board execution order (round-13 review)
-    org.apache.spark.sql.graft.GraftOptimizations.install(spark)
     new java.io.File(outDir).mkdirs()
     val selected =
       if (only.isEmpty) SparkEntry.queries

@@ -209,18 +209,14 @@ object TextOps {
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame]
   private val maxLiveCaches = 32
   // Storage level for tracked caches (round-15 verdict task 6,
-  // guide §5). Default stays Spark's cache() level (MEMORY_AND_DISK,
-  // deserialized) so the bench methodology is unchanged; a deployment
-  // whose executors are memory-tight can set
-  // SPARK_GRAFT_CACHE_LEVEL=MEMORY_AND_DISK_SER to trade decode CPU for
-  // a several-x smaller footprint. Since the round-15 rewrites, every
-  // registered query's tracked frame is a post-aggregate/projected frame
-  // SMALLER than its source (the corpus-sized raw-explode caches are
-  // gone), so the deserialized default is no longer a multi-corpus-size
-  // exposure at scale.
-  private val cacheLevel: org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.fromString(
-      sys.env.getOrElse("SPARK_GRAFT_CACHE_LEVEL", "MEMORY_AND_DISK"))
+  // guide §5): Spark's cache() level (MEMORY_AND_DISK, deserialized).
+  // Since the round-15 rewrites, every registered query's tracked frame
+  // is a post-aggregate/projected frame SMALLER than its source (the
+  // corpus-sized raw-explode caches are gone), so the deserialized level
+  // is no longer a multi-corpus-size exposure at scale; a memory-tight
+  // deployment would trade decode CPU for a several-x smaller footprint
+  // with MEMORY_AND_DISK_SER.
+  private val cacheLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   // observability counters (round-8 verdict: the bench artifact must report
   // registry behavior so an eviction-churn regression is distinguishable
   // from host load); read via cacheStats, zeroed by resetCacheStats

@@ -2452,22 +2452,16 @@ object DedupQueries {
         graft.streaming.FileReplay.rangeChunks(keyed, col("doc_id"), 4))
       // scale-aware state shuffle: tiny at sf0.1 (task scheduling
       // dominates), wide at the 10-100x fixtures (a pinned 8 serialized
-      // the keyed exchange — round-13 verdict task 3); restored before
-      // the returned batch frame is planned. Parquet sink, not memory:
-      // the emitted set is corpus-sized, and the memory sink funnels it
-      // through the driver.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", graft.streaming.FileReplay
-        .replayPartitions(keyed.count()).toString)
+      // the keyed exchange — round-13 verdict task 3). Parquet sink, not
+      // memory: the emitted set is corpus-sized, and the memory sink
+      // funnels it through the driver.
       val res =
         try graft.streaming.FileReplay.replayToParquet(
           graft.streaming.Sketches
             .streamingExactDedup(replay.stream, "doc_id", "key").toDF(),
+          graft.streaming.FileReplay.replayPartitions(keyed.count()))(
           replay.feedAll)
-        finally {
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-          replay.close()
-        }
+        finally replay.close()
       res.select(col("id"),
         col("keep").cast("int").as("keep"), col("keeper"))
     },
@@ -2489,24 +2483,19 @@ object DedupQueries {
       // its later member, against bucket state or intra-batch
       val replay = graft.streaming.FileReplay.stage(docs,
         graft.streaming.FileReplay.rangeChunks(docs, col("doc_id"), 3))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       // scale-aware: the banded bucket state is docs x bands rows — a
       // pinned 8 carried the 100x corpus's 2M-row exchange on 8 tasks
       // (103 s; round-13 verdict task 3). Parquet sink, not memory: 4.8M
       // candidate pairs at 100x would otherwise funnel through the driver.
-      s.conf.set("spark.sql.shuffle.partitions", graft.streaming.FileReplay
-        .replayPartitions(docs.count() * 4).toString)
       val emitted =
         try graft.streaming.FileReplay.replayToParquet(
           graft.streaming.Sketches
             .streamingLshCandidates(replay.stream,
               "doc_id", "text", shingleSize = 3, k = 8, bands = 4,
               maxBucket = 1 << 20).toDF(),
+          graft.streaming.FileReplay.replayPartitions(docs.count() * 4))(
           replay.feedAll)
-        finally {
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-          replay.close()
-        }
+        finally replay.close()
       val streamPairs = emitted
         .select(col("docA").as("doc_a"), col("docB").as("doc_b")).distinct()
       // tracked cache: the batch candidate set is identical across bench
@@ -2561,23 +2550,20 @@ object DedupQueries {
         graft.streaming.FileReplay.rangeChunks(toks, col("doc_id"), 4))
       val cap = 28
       val sink = s"st_stream_topk_${streamEpoch.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = graft.streaming.Sketches
-        .spaceSavingTopK(replay.stream.select("w").as[String],
-          shards = 1, capacity = cap, k = cap)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("update").start()
+      val q = graft.streaming.FileReplay.start(s, 8) {
+        graft.streaming.Sketches
+          .spaceSavingTopK(replay.stream.select("w").as[String],
+            shards = 1, capacity = cap, k = cap)
+          .writeStream.format("memory").queryName(sink)
+          .outputMode("update").start()
+      }
       var beforeFinal = 0
       try {
         val ids = replay.chunkIds
         ids.dropRight(1).foreach(replay.feed(q, _))
         beforeFinal = s.table(sink).count().toInt
         replay.feed(q, ids.last)
-      } finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+      } finally q.stop()
       // gates against exact counts of the replayed corpus, computed
       // DISTRIBUTED over the staged files; only the final summary (<= cap
       // rows) and the heavy-item set (<= cap by the N/capacity bound)
@@ -2629,18 +2615,14 @@ object DedupQueries {
       val replay = graft.streaming.FileReplay.stage(keyed,
         graft.streaming.FileReplay.rangeChunks(keyed, col("doc_id"), 4))
       val sink = s"dd_stream_novelty_${streamEpoch.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = graft.streaming.Sketches
-        .bloomNovelty(replay.stream.select("k").as[String],
-          shards = 2, nBits = 1 << 17, nHashes = 4)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("update").start()
-      try replay.feedAll(q)
-      finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val q = graft.streaming.FileReplay.start(s, 8) {
+        graft.streaming.Sketches
+          .bloomNovelty(replay.stream.select("k").as[String],
+            shards = 2, nBits = 1 << 17, nHashes = 4)
+          .writeStream.format("memory").queryName(sink)
+          .outputMode("update").start()
       }
+      try replay.feedAll(q) finally q.stop()
       // gates as aggregates over the sink/staged frames — only four
       // scalars reach the driver
       val flags = s.table(sink)
@@ -2689,17 +2671,13 @@ object DedupQueries {
       val replay = graft.streaming.FileReplay.stage(keyed,
         graft.streaming.FileReplay.rangeChunks(keyed, col("doc_id"), 4))
       val sink = s"st_stream_hll_${streamEpoch.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = graft.streaming.Sketches
-        .hllDistinct(replay.stream.select("k").as[String], shards = 2, p = p)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("update").start()
-      try replay.feedAll(q)
-      finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      val q = graft.streaming.FileReplay.start(s, 4) {
+        graft.streaming.Sketches
+          .hllDistinct(replay.stream.select("k").as[String], shards = 2, p = p)
+          .writeStream.format("memory").queryName(sink)
+          .outputMode("update").start()
       }
+      try replay.feedAll(q) finally q.stop()
       // sink rows = shards x batches (bounded); exact count is a scalar
       val (regs, exact) = try {
         (s.table(sink).as[graft.streaming.HllShard].collect().map(_.regs),
@@ -2730,8 +2708,6 @@ object DedupQueries {
       val replay = graft.streaming.FileReplay.stage(rows,
         graft.streaming.FileReplay.rangeChunks(rows, col("user_id"), 4))
       val sink = s"st_stream_kmv_${streamEpoch.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
       val agg = replay.stream
         .withColumn("hv",
           conv(substring(md5(concat(col("event_type"), lit(":"),
@@ -2739,12 +2715,13 @@ object DedupQueries {
         .groupBy("event_type")
         .agg(org.apache.spark.sql.graft.KmvAgg
           .kmvMinhashes(col("hv"), col("user_id"), 128).as("sketch"))
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
+      val q = graft.streaming.FileReplay.start(s, 4) {
+        agg.writeStream.format("memory").queryName(sink)
+          .outputMode("complete").start()
+      }
       try replay.feedAll(q)
       finally {
         q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
         replay.close()
       }
       // mirror q_kmv_native's null semantics (review finding): a group
@@ -2785,18 +2762,17 @@ object DedupQueries {
       val replay = graft.streaming.FileReplay.stage(rows,
         graft.streaming.FileReplay.rangeChunks(rows, col("event_id"), 4))
       val sink = s"st_stream_topk_exact_${streamEpoch.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
       val agg = replay.stream
         .groupBy("event_type")
         .agg(org.apache.spark.sql.graft.TopKAgg
           .topkEntries(col("value"), col("event_id"), 5).as("tk"))
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
+      val q = graft.streaming.FileReplay.start(s, 4) {
+        agg.writeStream.format("memory").queryName(sink)
+          .outputMode("complete").start()
+      }
       try replay.feedAll(q)
       finally {
         q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
         replay.close()
       }
       s.table(sink)

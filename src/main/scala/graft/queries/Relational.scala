@@ -2218,18 +2218,17 @@ object Relational {
     }) { (s0, dir) =>
       // Conf isolation (round-10 advice): the raised object-hash-agg
       // fallback threshold is read at EXECUTION time (after this lazy
-      // builder returns), so a save/restore here could not scope it. A
-      // CLONED session (shared SparkContext, SharedState, CacheManager;
-      // its own SQLConf) carries it only on the frames built from it —
-      // every other row in a shared session keeps the 128 default.
-      // 65536 covers hop-2's ~20k part groups per map partition (its
-      // winning hash regime); hop-1's ~seed-cardinality partials fall
-      // back to sort-based aggregation, which is a PARTITION-LOCAL sort
-      // of already-pruned rows — exactly the work a window would do,
-      // minus the full-mass shuffle.
-      val s = s0.newSession()
-      s.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "65536")
+      // builder returns), so a save/restore here could not scope it. An
+      // isolated child session (shared SparkContext, SharedState,
+      // CacheManager and graft rules; its own SQLConf) carries it only on
+      // the frames built from it — every other row in a shared session
+      // keeps the 128 default. 65536 covers hop-2's ~20k part groups per
+      // map partition (its winning hash regime); hop-1's
+      // ~seed-cardinality partials fall back to sort-based aggregation,
+      // which is a PARTITION-LOCAL sort of already-pruned rows — exactly
+      // the work a window would do, minus the full-mass shuffle.
+      val s = graft.EngineSession.isolated(s0,
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536")
       // the projected (c, p) pair stream — consumed by both hops, so
       // tracked-cached ONCE (17 bytes/row; the persisted-edge-list
       // posture a GNN sampler has — never deduped, never re-shuffled).

@@ -376,32 +376,26 @@ object StateQueries {
       val replay = graft.streaming.FileReplay.stage(
         ev.unionByName(sentinel), chunkExpr)
       val sink = s"st_stream_session_${sessionEpoch.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
       // append-mode session windows finalize ONLY when a watermark pass
       // runs with no new data: the sentinel batch raises the watermark,
       // but the emission itself happens in the no-data batch after it —
-      // so this row requires no-data micro-batches even though the bench/
-      // verify sessions disable them for the rest of the replay tier
-      // (every other row emits purely on data batches; see Bench.scala)
-      val prevNoData =
-        s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-      val q = replay.stream
-        .withWatermark("ts", "0 seconds")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("user_id"),
-          unix_millis(col("session_window.start")).as("session_start_ms"),
-          unix_millis(col("session_window.end")).as("session_end_ms"), col("n"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
+      // so this row needs no-data micro-batches, which the rest of the
+      // replay tier runs without (every other row emits purely on data
+      // batches; see FileReplay.start)
+      val q = graft.streaming.FileReplay.start(s, 8, noDataBatches = true) {
+        replay.stream
+          .withWatermark("ts", "0 seconds")
+          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("user_id"),
+            unix_millis(col("session_window.start")).as("session_start_ms"),
+            unix_millis(col("session_window.end")).as("session_end_ms"), col("n"))
+          .writeStream.format("memory").queryName(sink)
+          .outputMode("append").start()
+      }
       try replay.feedAll(q)
       finally {
         q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-          prevNoData)
         replay.close()
       }
       val stream = s.table(sink).filter(col("user_id") >= 0)
@@ -469,30 +463,24 @@ object StateQueries {
         .select(col("b"), col("ts"), col("value").as("v"))
       val replay = graft.streaming.FileReplay.stage(batched, col("b"))
       val sink = s"st_stream_late_${sessionEpoch.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
       // this row's late-vs-kept split is sensitive to WHEN the watermark
       // pass runs between the delayed-batch publishes (oracle-verified:
       // with no-data batches off the kept set changes), so it keeps them
       // on like st_stream_session_parity while the rest of the replay
-      // tier runs without them (see Bench.scala)
-      val prevNoData =
-        s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-      val q = replay.stream
-        .withWatermark("ts", "2 hours")
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("v").cast(DecimalType(18, 4))).as("sd"))
-        .select(unix_millis(col("window.start")).as("ws"), col("n"), col("sd"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("update").start()
+      // tier runs without them (see FileReplay.start)
+      val q = graft.streaming.FileReplay.start(s, 4, noDataBatches = true) {
+        replay.stream
+          .withWatermark("ts", "2 hours")
+          .groupBy(window(col("ts"), "1 hour"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("v").cast(DecimalType(18, 4))).as("sd"))
+          .select(unix_millis(col("window.start")).as("ws"), col("n"), col("sd"))
+          .writeStream.format("memory").queryName(sink)
+          .outputMode("update").start()
+      }
       try replay.feedAll(q)
       finally {
         q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-          prevNoData)
         replay.close()
       }
       // final state per window = its max-n update emission (counts are
@@ -555,21 +543,21 @@ object StateQueries {
           .select(col("ts").as("c_ts"), col("event_id").as("c_id"),
             col("user_id").as("c_user")), chunkOf(col("c_ts")))
       val sink = s"st_stream_join_${sessionEpoch.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       // 4 state partitions: the replay cost is per-partition state-store
       // commits x micro-batches, not row volume, at this fixture size
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = pReplay.stream
-        .withWatermark("p_ts", "1 hour")
-        .join(cReplay.stream
-            .withWatermark("c_ts", "1 hour"),
-          col("user_id") === col("c_user") &&
-            col("c_ts") >= col("p_ts") - expr("INTERVAL 6 HOURS") &&
-            col("c_ts") <= col("p_ts"))
-        .select(col("p_id"), col("c_id"), col("user_id"),
-          unix_millis(col("p_ts")).as("p_ms"), unix_millis(col("c_ts")).as("c_ms"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
+      val q = graft.streaming.FileReplay.start(s, 4) {
+        pReplay.stream
+          .withWatermark("p_ts", "1 hour")
+          .join(cReplay.stream
+              .withWatermark("c_ts", "1 hour"),
+            col("user_id") === col("c_user") &&
+              col("c_ts") >= col("p_ts") - expr("INTERVAL 6 HOURS") &&
+              col("c_ts") <= col("p_ts"))
+          .select(col("p_id"), col("c_id"), col("user_id"),
+            unix_millis(col("p_ts")).as("p_ms"), unix_millis(col("c_ts")).as("c_ms"))
+          .writeStream.format("memory").queryName(sink)
+          .outputMode("append").start()
+      }
       try {
         // publish both sides' quarter i before draining, so each
         // micro-batch sees the time-aligned pair (a mid-publish trigger
@@ -583,7 +571,6 @@ object StateQueries {
         }
       } finally {
         q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
         pReplay.close()
         cReplay.close()
       }
@@ -638,18 +625,17 @@ object StateQueries {
       val replay = graft.streaming.FileReplay.stage(rows,
         graft.streaming.FileReplay.rangeChunks(rows, col("ts"), 5))
       val sink = s"st_stream_cep_${sessionEpoch.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = graft.streaming.Cep
-        .sequenceMatches(replay.stream.as[graft.streaming.SeqEvent],
-          "signup", "click", "purchase", 86400000L)
-        .toDF()
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
+      val q = graft.streaming.FileReplay.start(s, 4) {
+        graft.streaming.Cep
+          .sequenceMatches(replay.stream.as[graft.streaming.SeqEvent],
+            "signup", "click", "purchase", 86400000L)
+          .toDF()
+          .writeStream.format("memory").queryName(sink)
+          .outputMode("append").start()
+      }
       try replay.feedAll(q)
       finally {
         q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
         replay.close()
       }
       s.table(sink)
@@ -688,18 +674,17 @@ object StateQueries {
       val replay = graft.streaming.FileReplay.stage(rows,
         graft.streaming.FileReplay.rangeChunks(rows, col("ts"), 5))
       val sink = s"st_stream_asof_${sessionEpoch.incrementAndGet()}"
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = graft.streaming.Cep
-        .asOfEnrich(replay.stream.as[graft.streaming.EnrichEvent],
-          "error", "purchase")
-        .toDF()
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
+      val q = graft.streaming.FileReplay.start(s, 4) {
+        graft.streaming.Cep
+          .asOfEnrich(replay.stream.as[graft.streaming.EnrichEvent],
+            "error", "purchase")
+          .toDF()
+          .writeStream.format("memory").queryName(sink)
+          .outputMode("append").start()
+      }
       try replay.feedAll(q)
       finally {
         q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
         replay.close()
       }
       s.table(sink).select(col("queryId").as("event_id"),
@@ -736,14 +721,11 @@ object StateQueries {
         .withColumn("__c", col("__c") + 1)
       val staged = fresh.unionByName(redelivered)
       val replay = graft.streaming.FileReplay.stage(staged, col("__c"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       // scale-aware: the dedup state exchange carries ~1.25x the events
       // table per replay — a pinned 4 serialized the 100x fixture's
       // 12.5M rows onto 4 tasks (64 s; round-13 verdict task 3). Parquet
       // sink, not memory: the row re-emits the whole events table, which
       // the memory sink would funnel through the driver.
-      s.conf.set("spark.sql.shuffle.partitions", graft.streaming.FileReplay
-        .replayPartitions(ev.count()).toString)
       val res =
         try graft.streaming.FileReplay.replayToParquet(
           replay.stream
@@ -751,11 +733,9 @@ object StateQueries {
             .dropDuplicatesWithinWatermark("event_id")
             .select(col("event_id"), unix_millis(col("ts")).as("ms"),
               col("value")),
+          graft.streaming.FileReplay.replayPartitions(ev.count()))(
           replay.feedAll)
-        finally {
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-          replay.close()
-        }
+        finally replay.close()
       res.select(col("event_id"), col("ms"), col("value"))
     },
 

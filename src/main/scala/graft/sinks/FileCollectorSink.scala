@@ -100,17 +100,20 @@ class FileCollectorSink(
   def write(batch: DataFrame): Unit = {
     import org.apache.spark.sql.functions._
     val cap = maxLinesPerBatch
-    // ONE job: globally sort by arrival time (line as tie-break, so the
-    // kept prefix is deterministic instead of plan-dependent), then each
-    // partition reports its row count plus at most its cap earliest rows.
-    // The sort's range partitioning means concatenating partition heads in
-    // order and taking cap yields exactly the earliest cap rows, and the
-    // exact dropped count comes from the same pass — the old path
-    // re-executed the batch lineage with a second count() job and kept an
-    // arbitrary limit() subset that could disagree with that count.
-    val perPart = batch
+    // ONE job, no exchange: each partition sorts itself by arrival time
+    // (line as tie-break, so the kept prefix is deterministic instead of
+    // plan-dependent) and reports its row count plus at most its cap
+    // earliest rows. The earliest cap rows of the batch are among those
+    // heads, so sorting the concatenated heads on the driver and taking
+    // cap keeps exactly them, and the exact dropped count comes from the
+    // same pass. A global orderBy would read the batch twice: a
+    // range-partitioner sampling job, then the shuffle. The coalesce
+    // (no shuffle) holds the driver-side heads to shuffle.partitions x cap
+    // rows, however many partitions the source hands the batch.
+    val parts = batch.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val perPart = batch.coalesce(parts)
       .select(unix_millis(col("ts")).as("ts_ms"), col("line"))
-      .orderBy("ts_ms", "line")
+      .sortWithinPartitions("ts_ms", "line")
       .as[(Long, String)](org.apache.spark.sql.Encoders.product[(Long, String)])
       .rdd.mapPartitions { it =>
         var n = 0L
@@ -120,7 +123,11 @@ class FileCollectorSink(
       }.collect()
     val total = perPart.map(_._1).sum
     if (total > cap) onDropped(total - cap)
-    processBatch(perPart.iterator.flatMap(_._2).take(cap).toSeq)
+    // the driver sort compares lines as UTF-8 bytes, Spark's string order
+    // (a JVM String compare differs from it above U+FFFF)
+    val byArrival = Ordering.by[(Long, String), Long](_._1)
+      .orElseBy(r => org.apache.spark.unsafe.types.UTF8String.fromString(r._2))
+    processBatch(perPart.iterator.flatMap(_._2).toSeq.sorted(byArrival).take(cap))
   }
 
   private def appendLine(dest: Path, line: String): Unit = {

@@ -1,14 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Write the formatted physical plan of board queries to
   * `<outDir>/<name>_<suffix>.txt` — the optimization-round evidence files
-  * (plans/r14/<query>_before.txt / _after.txt). The session mirrors
-  * graft.Bench exactly (same master/conf/dialect install), so the dumped
-  * plan is the plan the bench actually times, not ExplainQ's 4-core
-  * variant.
+  * (plans/r14/<query>_before.txt / _after.txt). The session is built
+  * like graft.Bench's (EngineSession: same conf and dialect install), so
+  * the dumped plan is the plan the bench actually times.
   *
   * Usage: runMain graft.tools.DumpPlans <sfDir> <outDir> <suffix> [name...]
   * (no names = every registered query).
@@ -20,21 +18,8 @@ object DumpPlans {
     val suffix = args(2)
     val names0 = args.drop(3).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP_BYTES", "67108864"))
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      .config("spark.sql.streaming.noDataMicroBatches.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_NODATA", "false"))
-      .getOrCreate()
+    val spark = graft.EngineSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    org.apache.spark.sql.graft.GraftOptimizations.install(spark)
     java.nio.file.Files.createDirectories(outDir)
     val names =
       if (names0.nonEmpty) names0 else graft.SparkEntry.queries.keys.toSeq.sorted

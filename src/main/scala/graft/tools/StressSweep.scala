@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Out-of-core stress sweep (round-11 verdict task 1): run named board
   * rows against a scale fixture under a DELIBERATELY small heap and
@@ -31,11 +30,8 @@ object StressSweep {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the session the board runs on (EngineSession), graft rules included
+    val spark = graft.EngineSession.create(master, cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {

@@ -72,4 +72,10 @@ object GraftOptimizations {
       if (!strategies2.contains(LshSelfJoinStrategy))
         spark.experimental.extraStrategies = strategies2 :+ LshSelfJoinStrategy
     }
+
+  /** `cloneSession()`, which copies the installed rules and runtime conf
+    * into the child, is `private[sql]`; this package reaches it.
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 }

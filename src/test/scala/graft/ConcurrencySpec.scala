@@ -14,9 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * The row set deliberately overlaps on shared cached intermediates
   * (dd_minhash_lsh / dd_clusters / dd_keep_policy all derive the banded
   * signature index) and exceeds nothing the registry bound can't evict.
-  * Streaming-replay rows are excluded by design: they mutate session
-  * conf (shuffle.partitions) as a scoped fixture knob, which is not a
-  * concurrent-stage shape.
+  * Streaming-replay rows are excluded by design: a replay row is a
+  * fixture replayed micro-batch by micro-batch, not a concurrent-stage
+  * shape. ReplayConcurrencySpec runs them concurrently, and
+  * EngineSessionSpec pins that their scoped query starts leave the shared
+  * session's conf unchanged.
   */
 class ConcurrencySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -25,9 +27,9 @@ class ConcurrencySpec extends AnyFunSuite {
   // round-10 extension rows included: tx_unigram_lm holds THREE tracked
   // caches (word counts, mask segmentations, f0/c1 piece tables) so it
   // stresses the LRU bound hardest; v_neighbor_sample raises the
-  // ObjectHashAggregate fallback conf on a CLONED session (round-10
-  // advice) so no conf race exists — this suite pins that the isolated
-  // conf still yields serial-equal answers under contention
+  // ObjectHashAggregate fallback conf on an isolated child session
+  // (round-10 advice) so no conf race exists — this suite pins that the
+  // isolated conf still yields serial-equal answers under contention
   private val names = Seq("q1_agg", "dd_exact", "dd_minhash_lsh",
     "dd_clusters", "dd_keep_policy", "tx_tfidf", "q_tpch9", "ann_topk",
     "tx_unigram_lm", "tx_dsir_select", "v_neighbor_sample",

@@ -111,13 +111,31 @@ class FileCollectorSpec extends AnyFunSuite {
     var dropped = -1L
     val sink = new FileCollectorSink(s"$dir/data.csv",
       maxLinesPerBatch = 5, onDropped = n => dropped = n)
+    // a round-robin shuffle spreads the earliest rows over 4 partitions,
+    // so the kept set depends on merging every partition's head; the
+    // checkpoint materializes that shuffle, so the job count below is
+    // write()'s own
     val batch = (1 to 40).map(i => (s"row$i", new java.sql.Timestamp(i * 1000L)))
-      .toDF("line", "ts")
-    sink.write(batch)
+      .toDF("line", "ts").repartition(4).localCheckpoint()
+    assert(batch.rdd.getNumPartitions == 4)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.ListenerBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      sink.write(batch)
+      org.apache.spark.sql.graft.ListenerBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
     val kept = new String(Files.readAllBytes(Paths.get(s"$dir/data.csv")))
       .split("\n").toSeq
     assert(kept.length == 5, s"cap not applied: ${kept.length} lines written")
     assert(dropped == 35L, s"overflow misreported: $dropped")
+    assert(kept == (1 to 5).map(i => s"row$i"), s"wrong rows kept: $kept")
+    assert(jobs.get == 1, s"write() ran ${jobs.get} Spark jobs, not one")
   }
 
   test("IDLE fires once per idle episode after the timeout") {

@@ -73,7 +73,7 @@ class FileReplaySpec extends AnyFunSuite {
     val r = graft.streaming.FileReplay.stage(df, when(col("id") < 10, 0).otherwise(1))
     val out = try {
       graft.streaming.FileReplay.replayToParquet(
-        r.stream.select(col("id")), q => r.feedAll(q))
+        r.stream.select(col("id")), 4)(r.feedAll)
     } finally r.close()
     assert(out.count() == 20) // fully consumed before the purge
     val mine = graft.streaming.FileReplay.trackedPsinks

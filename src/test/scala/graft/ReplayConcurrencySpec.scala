@@ -3,12 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-11 verdict task 5: the bench replay tier runs CONCURRENTLY on
-  * cloned sessions since round 12. This spec pins what that requires:
-  * streaming parity rows executed simultaneously on `spark.newSession()`
-  * clones return exactly the rows they return serially — session-conf
-  * scoping (shuffle.partitions fixture knobs) doesn't race, memory-sink
-  * names don't collide, and FileReplay's staged-corpus LRU never evicts
-  * files a live concurrent handle still publishes from (refcount pin).
+  * isolated child sessions since round 12. This spec pins what that
+  * requires: streaming parity rows executed simultaneously on
+  * `EngineSession.isolated` children return exactly the rows they return
+  * serially — the scoped streaming conf of each query start
+  * (FileReplay.start) doesn't race, memory-sink names don't collide, and
+  * FileReplay's staged-corpus LRU never evicts files a live concurrent
+  * handle still publishes from (refcount pin).
   */
 class ReplayConcurrencySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -35,7 +36,7 @@ class ReplayConcurrencySpec extends AnyFunSuite {
       (1 to 2).foreach { wave =>
         val futs = rows.map { n =>
           n -> pool.submit(new java.util.concurrent.Callable[Seq[String]] {
-            override def call(): Seq[String] = run(spark.newSession(), n)
+            override def call(): Seq[String] = run(EngineSession.isolated(spark), n)
           })
         }
         futs.foreach { case (n, f) =>
@@ -55,7 +56,7 @@ class ReplayConcurrencySpec extends AnyFunSuite {
       val futs = Seq("st_stream_session_parity", "st_stream_late_parity")
         .map { n =>
           pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = { run(spark.newSession(), n); () }
+            override def call(): Unit = { run(EngineSession.isolated(spark), n); () }
           })
         }
       futs.foreach(_.get())
