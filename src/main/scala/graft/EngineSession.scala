@@ -20,7 +20,8 @@ object EngineSession {
 
   /** Build (or join) a session with the batch conf every entry point
     * shares, then `conf` (which may override it), and install the graft
-    * dialect (pow rewrite + native strategies) at session build: the pow
+    * dialect (pow rewrite + native strategies, plus the fork-free local
+    * checkpoint writer) at session build: the pow
     * rule used to arrive only as a side effect of the first as-of/LSH
     * join, making unrelated rows' doubles depend on board execution order.
     * It leaves streaming conf at Spark's defaults: a deployment (GraftApp)

@@ -673,19 +673,7 @@ object DedupQueries {
         |  FROM per WHERE vec_id <> qid) t WHERE rn <= 10""".stripMargin) {
       (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      // ONE driver round-trip serves the PQ init AND the query vectors
-      // (round-15 job fusion): every row with vec_id < 3 is by definition
-      // among the first 4 rows ordered by vec_id, so the first-4 collect
-      // contains both the init (all 4, the pqState definition) and the
-      // queries (the id < 3 prefix, in the same ascending-id order the
-      // separate collect produced) — two sequential corpus jobs become one
-      val first: Array[(Long, Array[Double])] = e
-        .orderBy("vec_id")
-        .select(col("vec_id").cast("long"),
-          transform(col("embedding"), x => x.cast("double")))
-        .limit(4)
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      val first = adcFirstFour(e)
       val (cb, _) = VectorOps.pqState(e, "vec_id", "embedding",
         m = 8, k = 4, iters = 1, initRows = first.map(_._2))
       val qs: Array[(Long, Array[Double])] = first.filter(_._1 < 3)
@@ -2823,6 +2811,30 @@ object DedupQueries {
     val sels = (1 to k).map(i =>
       s"SELECT $i AS step, vec_id, round(score, 6) AS score FROM s$i")
     "WITH " + ctes.result().mkString(",\n") + "\n" + sels.mkString("\nUNION ALL\n")
+  }
+
+  /** ann_adc's one driver round-trip: the first 4 embeddings by
+    * `vec_id`, which serve as the PQ init (all 4, the pqState
+    * definition) AND hold the queries (the `vec_id < 3` prefix, in
+    * ascending-id order), so two sequential corpus jobs are one
+    * (round-15 job fusion). That every row with `vec_id < 3` is among
+    * the first 4 holds only for distinct, non-negative ids, so both are
+    * required of the collected rows (no extra job).
+    */
+  private[graft] def adcFirstFour(
+      e: org.apache.spark.sql.DataFrame): Array[(Long, Array[Double])] = {
+    val first = e
+      .orderBy("vec_id")
+      .select(col("vec_id").cast("long"),
+        transform(col("embedding"), x => x.cast("double")))
+      .limit(4)
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val ids = first.map(_._1)
+    require(ids.distinct.length == ids.length && ids.forall(_ >= 0),
+      "ann_adc takes its vec_id < 3 queries from the first 4 rows by " +
+        s"vec_id, which assumes distinct, non-negative ids; got ${ids.mkString(", ")}")
+    first
   }
 
   /** dd_cross_split_leak body, dispatch-parameterized so PlanSpec3 can

@@ -73,9 +73,22 @@ class FileCollectorSink(
     cand
   }
 
+  /** The destination being appended to within one batch: open once,
+    * its size tracked in memory instead of re-read per line.
+    */
+  private final class OpenFile(val dest: Path, var size: Long,
+      val out: java.io.OutputStream)
+  @transient private var open: OpenFile = null
+
+  private def closeOpen(): Unit = if (open != null) {
+    val o = open
+    open = null
+    o.out.close()
+  }
+
   /** Append one micro-batch of (epochMillis, line), in arrival order. */
   def processBatch(rows: Seq[(Long, String)]): Unit = synchronized {
-    rows.foreach { case (ts, line) =>
+    try rows.foreach { case (ts, line) =>
       // skipCount decimation: skip N-1 arrivals, keep the Nth
       if (decimation > 1 && { skipped += 1; skipped < decimation }) ()
       else {
@@ -87,7 +100,7 @@ class FileCollectorSink(
       }
       lastDataMs = System.currentTimeMillis()
       idleFired = false
-    }
+    } finally closeOpen()
   }
 
   /** foreachBatch adapter for a streaming frame with (line, ts) columns.
@@ -131,15 +144,23 @@ class FileCollectorSink(
   }
 
   private def appendLine(dest: Path, line: String): Unit = {
-    val isNew = !Files.exists(dest)
-    if (isNew && dest.getParent != null) Files.createDirectories(dest.getParent)
     val sb = new StringBuilder
-    if (isNew) headers.foreach(h =>
-      sb.append(h.replace("{file}", dest.getFileName.toString)).append('\n'))
+    if (open == null || open.dest != dest) {
+      closeOpen()
+      val isNew = !Files.exists(dest)
+      if (isNew && dest.getParent != null) Files.createDirectories(dest.getParent)
+      if (isNew) headers.foreach(h =>
+        sb.append(h.replace("{file}", dest.getFileName.toString)).append('\n'))
+      open = new OpenFile(dest, if (isNew) 0L else Files.size(dest),
+        new java.io.BufferedOutputStream(Files.newOutputStream(dest,
+          StandardOpenOption.CREATE, StandardOpenOption.APPEND)))
+    }
     sb.append(line).append('\n')
-    Files.write(dest, sb.toString.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    if (maxBytes > 0 && Files.size(dest) >= maxBytes) {
+    val bytes = sb.toString.getBytes(StandardCharsets.UTF_8)
+    open.out.write(bytes)
+    open.size += bytes.length
+    if (maxBytes > 0 && open.size >= maxBytes) {
+      closeOpen()
       val renamed = splitTarget(dest)
       Files.move(dest, renamed)
       val reported =
@@ -150,6 +171,7 @@ class FileCollectorSink(
   }
 
   private def rollOver(newForm: String): Unit = {
+    closeOpen()
     val old = fileFor(currentForm)
     currentForm = newForm
     val reported =

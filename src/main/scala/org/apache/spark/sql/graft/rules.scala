@@ -43,6 +43,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   * at build time; experimental methods take effect immediately).
   */
 object GraftOptimizations {
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
   // install() is called from every AsOf.joinAsOf; the read-check-append on
   // the session's experimental lists is not atomic, so two threads building
   // as-of joins concurrently could double-register a rule or drop one
@@ -58,12 +60,21 @@ object GraftOptimizations {
   // is a side effect a caller can't see (round-13 review). Operator
   // entry points pass false; the full-dialect surface (GraftExtensions,
   // the board sessions, MathDsl consumers) keeps the default true.
+  //
+  // The session-build form also binds local checkpoint writes to
+  // `graft.streaming.LocalCheckpointFileManager` unless the caller chose
+  // a manager: Spark's default forks `chmod` per file without Hadoop's
+  // native library. Clones (`EngineSession.isolated`) inherit the key;
+  // operator entry points leave conf alone.
   def install(spark: SparkSession, withPowRewrite: Boolean = true): Unit =
     synchronized {
       if (withPowRewrite) {
         val current = spark.experimental.extraOptimizations
         if (!current.contains(PowToMultiply))
           spark.experimental.extraOptimizations = current :+ PowToMultiply
+        if (spark.conf.getOption(CheckpointManagerKey).isEmpty)
+          spark.conf.set(CheckpointManagerKey,
+            classOf[graft.streaming.LocalCheckpointFileManager].getName)
       }
       val strategies = spark.experimental.extraStrategies
       if (!strategies.contains(AsOfJoinStrategy))

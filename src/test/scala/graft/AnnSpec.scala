@@ -38,6 +38,21 @@ class AnnSpec extends AnyFunSuite {
     }
   }
 
+  test("ann_adc refuses duplicate query ids instead of mis-picking its queries") {
+    import spark.implicits._
+    // vec_id 0 twice: the first 4 rows by id are 0, 0, 1, 2, so the
+    // vec_id < 3 prefix is not the 3 distinct queries the row assumes
+    val e = Seq(0, 0, 1, 2, 3, 4)
+      .map(i => (i, Array.fill(8)(i.toFloat)))
+      .toDF("vec_id", "embedding")
+    val err = intercept[IllegalArgumentException](
+      graft.queries.DedupQueries.adcFirstFour(e))
+    assert(err.getMessage.contains("distinct, non-negative ids"), err.getMessage)
+    val ok = graft.queries.DedupQueries.adcFirstFour(
+      Seq(5, 0, 1, 2, 3).map(i => (i, Array.fill(8)(i.toFloat))).toDF("vec_id", "embedding"))
+    assert(ok.map(_._1).toSeq == Seq(0L, 1L, 2L, 3L))
+  }
+
   test("ivfAssign classifies a STREAM of embeddings (pure projection, online)") {
     // the assignment stage is zero-shuffle/zero-join by construction
     // (PlanSpec2 pins the batch plan), so it must also run unchanged on

@@ -57,6 +57,39 @@ class FileCollectorSpec extends AnyFunSuite {
     assert(fired.map(_._1).toSeq == Seq("MAXSIZE", "MAXSIZE"))
   }
 
+  test("one 50-line batch writes the same files and triggers as 50 one-line batches") {
+    // the sink keeps one writer open per batch: headers, ROLLOVER and the
+    // MAXSIZE split must land on the same lines as a per-line append
+    def run(batches: Seq[Seq[(Long, String)]]): (Map[String, String], Seq[(String, String)]) = {
+      val dir = tmp()
+      val fired = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      val sink = new FileCollectorSink(s"$dir/data.csv",
+        rollPattern = Some("yyyy-MM-dd_HH"), zipRoll = true, maxBytes = 120,
+        headers = Seq("# {file}"), onTrigger = (t, p) => fired += ((t, p.stripPrefix(dir))))
+      batches.foreach(sink.processBatch)
+      val files = new java.io.File(dir).listFiles().map { f =>
+        val body =
+          if (f.getName.endsWith(".zip")) {
+            val zin = new java.util.zip.ZipInputStream(new java.io.FileInputStream(f))
+            try { val e = zin.getNextEntry; e.getName + ":" + new String(zin.readAllBytes()) }
+            finally zin.close()
+          } else new String(Files.readAllBytes(f.toPath))
+        f.getName -> body
+      }.toMap
+      (files, fired.toSeq)
+    }
+    val lines = (0 until 50).map(i =>
+      (ms("2024-03-01 10:00:00") + i * 4L * 60 * 1000, f"line-$i%02d,${i * 7}"))
+    val (whole, wholeFired) = run(Seq(lines))
+    val (single, singleFired) = run(lines.map(Seq(_)))
+    assert(whole == single)
+    assert(wholeFired == singleFired)
+    // the case covers every path: rolled zips, size splits, headers
+    assert(wholeFired.map(_._1).toSet == Set("ROLLOVER", "MAXSIZE"))
+    assert(whole.keys.exists(_.matches("""data2024-03-01_\d\d\.\d\.csv""")))
+    assert(whole.values.forall(_.contains("# data2024-03-01_")))
+  }
+
   test("dotted directories stay intact: forms and split indexes modify only the filename") {
     val dir = tmp()
     Files.createDirectories(Paths.get(s"$dir/v1.2"))
