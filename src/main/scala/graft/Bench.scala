@@ -344,7 +344,7 @@ object Bench {
     // latency serialized on one thread — harness-bound, not engine-bound
     // (the concurrent board runs the queries themselves at ~8x/8 threads).
     // Each row runs on an isolated child session (EngineSession.isolated,
-    // which keeps the graft rules): memory-sink temp views and streaming
+    // which keeps the graft dialect): memory-sink temp views and streaming
     // query names are session-/epoch-scoped; each row sets its streaming
     // conf only while its query starts (FileReplay.start, under one lock);
     // FileReplay's staged LRU is refcount-pinned against cross-thread

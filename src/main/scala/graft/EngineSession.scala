@@ -1,13 +1,17 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.{GraftExtensions, GraftOptimizations}
 
 /** The one place an engine session is configured, as dcafs configures
   * everything from one settings.xml read at boot. Every entry point
-  * (Bench, Verify, DumpPlans, StressSweep, GraftApp) builds through
-  * [[create]], so the plans Verify checks are the plans Bench times and
-  * DumpPlans prints. Replay queries scope their streaming conf through
-  * `FileReplay.start`; work that needs its own conf runs on [[isolated]].
+  * (Bench, Verify, DumpPlans, the tools, GraftApp) and the test suite
+  * build through [[create]], so the plans Verify checks are the plans
+  * Bench times, DumpPlans prints and the plan pins check. The graft
+  * dialect (`GraftExtensions`) is part of the session from its build, so
+  * every `newSession()` child plans and resolves like its parent. Replay
+  * queries scope their streaming conf through `FileReplay.start`; work
+  * that needs its own conf runs on [[isolated]].
   *
   * {{{ EngineSession.create(s"local[$cpus]", cpus.toInt) }}}
   */
@@ -18,12 +22,12 @@ object EngineSession {
     */
   private val ShjLocalMapBytes = 64L * 1024 * 1024
 
-  /** Build (or join) a session with the batch conf every entry point
-    * shares, then `conf` (which may override it), and install the graft
-    * dialect (pow rewrite + native strategies, plus the fork-free local
-    * checkpoint writer) at session build: the pow
-    * rule used to arrive only as a side effect of the first as-of/LSH
-    * join, making unrelated rows' doubles depend on board execution order.
+  /** Build a session with the graft dialect (`GraftExtensions`: pow
+    * rewrite, native join strategies, graft SQL functions), the fork-free
+    * local checkpoint writer, the batch conf every entry point shares,
+    * then `conf` (which may override it). Extensions apply only when
+    * `getOrCreate` creates the session, so joining a session that was
+    * built without them is an error, not a silent change of plans.
     * It leaves streaming conf at Spark's defaults: a deployment (GraftApp)
     * keeps no-data micro-batches on, which idle alerts need, and each
     * replay row sets its own at start (`FileReplay.start`).
@@ -35,7 +39,10 @@ object EngineSession {
   def create(master: String, shufflePartitions: Int,
       conf: (String, String)*): SparkSession = {
     val b = SparkSession.builder()
+      .withExtensions(new GraftExtensions)
       .master(master)
+      .config(GraftOptimizations.CheckpointManagerKey,
+        GraftOptimizations.CheckpointManager)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       // the batch tools serve no web UI; GraftApp turns it back on
@@ -68,19 +75,19 @@ object EngineSession {
       .foreach(m => b.config("spark.executor.memory", m))
     conf.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
-    org.apache.spark.sql.graft.GraftOptimizations.install(spark)
+    require(GraftOptimizations.installed(spark), "EngineSession.create " +
+      "joined a session built without the graft dialect; build it first")
     spark
   }
 
   /** A child of `s` for work that needs its own conf: it shares the
-    * SparkContext, SharedState and CacheManager, keeps `s`'s installed
-    * graft rules and runtime conf, and applies `conf` only to itself.
-    * `newSession` would start from empty extra optimizations and
-    * strategies (no `PowToMultiply`, no native joins) and drop runtime
-    * conf, so the isolated work would plan differently from its caller.
+    * SparkContext, SharedState and CacheManager, has the graft dialect and
+    * `s`'s build conf, and applies `conf` only to itself. Runtime conf set
+    * on `s` after its build does not carry over (`Tables.load` sets its
+    * own on whichever session loads).
     */
   def isolated(s: SparkSession, conf: (String, String)*): SparkSession = {
-    val child = org.apache.spark.sql.graft.GraftOptimizations.cloneSession(s)
+    val child = s.newSession()
     conf.foreach { case (k, v) => child.conf.set(k, v) }
     child
   }

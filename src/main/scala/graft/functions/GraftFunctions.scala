@@ -4,13 +4,14 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft._
 
-/** Public Column API for the graft function library + SQL registration.
+/** Public Column API for the graft function library, and the same
+  * functions by SQL name ([[sqlFunctions]]).
   *
   * Usage:
   * {{{
   *   import graft.functions.GraftFunctions._
   *   df.select(nmea_valid($"value"), salinity($"cond", $"temp", $"press"))
-  *   // or, after GraftFunctions.registerAll(spark):
+  *   // or, on a session with the graft dialect (EngineSession.create):
   *   spark.sql("SELECT crc16_modbus(value), salinity(c, t, p) FROM lines")
   * }}}
   */
@@ -115,42 +116,42 @@ object GraftFunctions {
     f(easting, northing, zone, north).cast("struct<lat:double,lon:double>")
   }
 
-  /** Register every function for SQL use on this session. */
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def one(name: String, builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
-    one("nmea_checksum", a => NmeaChecksum(a.head))
-    one("nmea_valid", a => NmeaValid(a.head))
-    one("crc16_modbus", a => Crc16Modbus(a.head))
-    one("lrc8", a => Lrc8(a.head))
-    one("signed_nbit", a => SignedNBit(a(0), a(1)))
-    one("bcd_decode", a => BcdDecode(a.head))
-    one("bcd_encode", a => BcdEncode(a.head))
-    one("simhash64", a => SimHash64(a.head))
-    one("rolling_hash", a => RollingHash(a.head))
-    one("modbus_decode", a => ModbusDecode(a.head))
-    one("shingles", a => Shingles(a(0), a(1)))
-    one("vec_dot", a => VecDot(a(0), a(1)))
-    one("vec_sqdist", a => VecSqDist(a(0), a(1)))
-    one("znorm_dist", a => ZNormDist(a(0), a(1)))
-    one("dtw_dist", a => DtwDist(a(0), a(1)))
-    one("tokens_ws", a => TokensWs(a.head))
-    one("count_in_set", a => CountInSet(a(0), a(1)))
-    one("nfc_normalize", a => NfcNormalize(a.head))
-    one("minhash_sig", a => MinHashSig(a(0), a(1)))
-    one("jaro_winkler", a => JaroWinkler(a(0), a(1)))
-    def macroFn(name: String, arity: Int, render: Seq[String] => String): Unit = {
+  /** Every function by its SQL name, as [[org.apache.spark.sql.graft.GraftExtensions]]
+    * injects it into each session it builds.
+    */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = {
+    def macroFn(name: String, arity: Int, render: Seq[String] => String) = {
       val names = (0 until arity).map(i => s"__arg$i")
-      one(name, args => {
-        val template = Bridge.parseExpression(spark, render(names))
+      name -> ((args: Seq[Expression]) => {
+        val template = Bridge.parseExpression(SparkSession.active, render(names))
         Bridge.substitute(template, names.zip(args).toMap)
       })
     }
-    macroFn("salinity", 3, n => Formulas.salinitySql(n(0), n(1), n(2)))
-    macroFn("sound_velocity", 3, n => Formulas.soundVelocitySql(n(0), n(1), n(2)))
-    macroFn("true_wind_speed", 5, n => Formulas.trueWindSpeedSql(n(0), n(1), n(2), n(3), n(4)))
-    macroFn("true_wind_dir", 5, n => Formulas.trueWindDirSql(n(0), n(1), n(2), n(3), n(4)))
-    macroFn("haversine_m", 4, n => Formulas.haversineSql(n(0), n(1), n(2), n(3)))
+    Seq[(String, Seq[Expression] => Expression)](
+      "nmea_checksum" -> (a => NmeaChecksum(a.head)),
+      "nmea_valid" -> (a => NmeaValid(a.head)),
+      "crc16_modbus" -> (a => Crc16Modbus(a.head)),
+      "lrc8" -> (a => Lrc8(a.head)),
+      "signed_nbit" -> (a => SignedNBit(a(0), a(1))),
+      "bcd_decode" -> (a => BcdDecode(a.head)),
+      "bcd_encode" -> (a => BcdEncode(a.head)),
+      "simhash64" -> (a => SimHash64(a.head)),
+      "rolling_hash" -> (a => RollingHash(a.head)),
+      "modbus_decode" -> (a => ModbusDecode(a.head)),
+      "shingles" -> (a => Shingles(a(0), a(1))),
+      "vec_dot" -> (a => VecDot(a(0), a(1))),
+      "vec_sqdist" -> (a => VecSqDist(a(0), a(1))),
+      "znorm_dist" -> (a => ZNormDist(a(0), a(1))),
+      "dtw_dist" -> (a => DtwDist(a(0), a(1))),
+      "tokens_ws" -> (a => TokensWs(a.head)),
+      "count_in_set" -> (a => CountInSet(a(0), a(1))),
+      "nfc_normalize" -> (a => NfcNormalize(a.head)),
+      "minhash_sig" -> (a => MinHashSig(a(0), a(1))),
+      "jaro_winkler" -> (a => JaroWinkler(a(0), a(1))),
+      macroFn("salinity", 3, n => Formulas.salinitySql(n(0), n(1), n(2))),
+      macroFn("sound_velocity", 3, n => Formulas.soundVelocitySql(n(0), n(1), n(2))),
+      macroFn("true_wind_speed", 5, n => Formulas.trueWindSpeedSql(n(0), n(1), n(2), n(3), n(4))),
+      macroFn("true_wind_dir", 5, n => Formulas.trueWindDirSql(n(0), n(1), n(2), n(3), n(4))),
+      macroFn("haversine_m", 4, n => Formulas.haversineSql(n(0), n(1), n(2), n(3))))
   }
 }

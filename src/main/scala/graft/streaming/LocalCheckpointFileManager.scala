@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCh
 
 /** Spark's checkpoint file manager with java.nio writes for local paths,
   * bound through `spark.sql.streaming.checkpointFileManagerClass` (see
-  * `GraftOptimizations.install`). Without Hadoop's native library every
+  * `EngineSession.create`). Without Hadoop's native library every
   * local file Spark creates forks `chmod` twice (file and `.crc`), which
   * made the offset log, commit log and each state-store delta cost tens
   * of ms a file; here a write is a temp file plus one atomic rename.

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -17,11 +16,7 @@ object AggProbe {
     val dir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.EngineSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
       .select("l_orderkey", "l_quantity")

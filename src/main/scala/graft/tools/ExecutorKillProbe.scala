@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Executor-LOSS recovery probe: run a shuffle-heavy native-aggregate
@@ -21,13 +20,8 @@ object ExecutorKillProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ExecutorKillProbe <sfDir> <jar>")
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,8,4096]")
-      .config("spark.executor.memory", "3g")
-      .config("spark.jars", args(1))
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.EngineSession.create("local-cluster[2,8,4096]", 16,
+      "spark.executor.memory" -> "3g", "spark.jars" -> args(1))
     spark.sparkContext.setLogLevel("ERROR")
 
     // shuffle-heavy + native aggregate: the orderkey repartition makes a

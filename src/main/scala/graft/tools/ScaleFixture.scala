@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-fixture generator: blow the sf0.1 corpus tables up by an integer
@@ -31,11 +30,7 @@ object ScaleFixture {
     val factor = facS.toInt
     require(factor >= 1 && factor <= 100, "factor in [1,100]")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.EngineSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

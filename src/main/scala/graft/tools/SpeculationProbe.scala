@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerSpeculativeTaskSubmitted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Duplicate-attempt determinism under SPECULATIVE execution — the third
@@ -36,17 +36,12 @@ object SpeculationProbe {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: SpeculationProbe <sfDir> <jar>")
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,4,3072]")
-      .config("spark.executor.memory", "2g")
-      .config("spark.jars", args(1))
-      .config("spark.speculation", "true")
-      .config("spark.speculation.interval", "50ms")
-      .config("spark.speculation.quantile", "0.5")
-      .config("spark.speculation.multiplier", "1.2")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.EngineSession.create("local-cluster[2,4,3072]", 8,
+      "spark.executor.memory" -> "2g", "spark.jars" -> args(1),
+      "spark.speculation" -> "true",
+      "spark.speculation.interval" -> "50ms",
+      "spark.speculation.quantile" -> "0.5",
+      "spark.speculation.multiplier" -> "1.2")
     spark.sparkContext.setLogLevel("ERROR")
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onSpeculativeTaskSubmitted(

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,11 +18,13 @@ object TopKProbe {
     val dir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // ObjectHashAggregate falls back to SORT-based aggregation after 128
+    // distinct keys per partition by default — which silently re-inserts
+    // the very sort the native aggregate exists to avoid when the group
+    // space is wide. Raise it so the high-cardinality regime measures
+    // the aggregate, not the fallback.
+    val spark = graft.EngineSession.create(s"local[$cpus]", cpus.toInt,
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "10000000")
     spark.sparkContext.setLogLevel("WARN")
     val orders = spark.read.parquet(s"$dir/orders.parquet")
       .select("o_custkey", "o_orderkey", "o_totalprice")
@@ -47,14 +48,6 @@ object TopKProbe {
         .agg(org.apache.spark.sql.graft.TopKAgg
           .topkEntries(col("o_totalprice"), col("o_orderkey"), 3).as("tk"))
         .select(col(g), posexplode(col("tk")))
-
-    // ObjectHashAggregate falls back to SORT-based aggregation after 128
-    // distinct keys per partition by default — which silently re-inserts
-    // the very sort the native aggregate exists to avoid when the group
-    // space is wide. Raise it so the high-cardinality regime measures
-    // the aggregate, not the fallback.
-    spark.conf.set(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "10000000")
 
     // Regime 1 — HIGH-cardinality groups (one per customer): the window's
     // per-partition radix sort has a strong constant on a local shuffle;

@@ -11,8 +11,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** As-of join as a first-class operator — the (c) tier of the custom-op
   * ladder: a logical node, a planner Strategy and a physical exec,
-  * registered through [[GraftExtensions]] /
-  * [[GraftOptimizations.install]]. Spark has no native as-of join; the
+  * registered through [[GraftExtensions]]. Spark has no native as-of join; the
   * compositional renderings (union + last-ignore-nulls window, or range
   * join + argmax) either widen the shuffle or materialize candidate
   * pairs. This operator does what a time-series engine does: hash-
@@ -156,7 +155,8 @@ object AsOf {
   /** `left` as-of `right` on an integral key and long time column: for
     * each left row, columns of the latest right row with the same key
     * and `right(timeCol) <= left(timeCol)` (nulls when none). Column
-    * names must not collide across sides (alias before joining).
+    * names must not collide across sides (alias before joining). The
+    * session must hold the graft dialect ([[GraftExtensions]]).
     */
   def joinAsOf(leftDf: DataFrame, rightDf: DataFrame, leftKeyCol: String,
       rightKeyCol: String, leftTimeCol: String, rightTimeCol: String,
@@ -164,7 +164,7 @@ object AsOf {
     import org.apache.spark.sql.catalyst.expressions.{Alias, Cast}
     import org.apache.spark.sql.catalyst.plans.logical.Project
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    GraftOptimizations.install(leftDf.sparkSession, withPowRewrite = false)
+    GraftOptimizations.requireInstalled(leftDf.sparkSession)
     val lp = leftDf.queryExecution.analyzed
     val rp0 = rightDf.queryExecution.analyzed
     // Self-join hygiene (round-8 advice): when both sides derive from the

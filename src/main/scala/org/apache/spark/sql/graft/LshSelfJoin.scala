@@ -175,12 +175,13 @@ object LshSelfJoin {
   /** Candidate pairs (doc_a < doc_b, possibly repeated across bands) from
     * a banded signature table. `idCol` must be integral; `bandCol`/
     * `bhCol` are the bucket key. Apply `.distinct()` for the dedup the
-    * compositional join pipeline applied.
+    * compositional join pipeline applied. The session must hold the
+    * graft dialect ([[GraftExtensions]]).
     */
   def candidatePairs(banded: DataFrame, idCol: String, bandCol: String,
       bhCol: String): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.Cast
-    GraftOptimizations.install(banded.sparkSession, withPowRewrite = false)
+    GraftOptimizations.requireInstalled(banded.sparkSession)
     val p = banded.queryExecution.analyzed
     // resolve with the session's resolver (spark.sql.caseSensitive) and
     // reject ambiguity — a first-match lookup would silently bind the

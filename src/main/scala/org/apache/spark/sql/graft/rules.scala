@@ -2,7 +2,8 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Multiply, Pow}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, Multiply, Pow}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.DoubleType
@@ -28,65 +29,65 @@ object PowToMultiply extends Rule[LogicalPlan] {
     }
 }
 
-/** SparkSessionExtensions entry point:
+/** The graft dialect, injected when a session is built: the pow rewrite,
+  * the as-of and LSH self-join planner strategies, and the graft SQL
+  * functions (`GraftFunctions.sqlFunctions`). `graft.EngineSession.create`
+  * builds every engine session with it; any other session gets it from
   * `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`.
+  * Extensions reach every `newSession()` of the built session, so a child
+  * plans and resolves like its parent. Operator entry points
+  * (`AsOf.joinAsOf`, `LshSelfJoin.candidatePairs`) require it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => PowToMultiply)
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     e.injectPlannerStrategy(_ => LshSelfJoinStrategy)
+    graft.functions.GraftFunctions.sqlFunctions.foreach { case (name, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
   }
 }
 
-/** Install on an already-built session (extensions can only be injected
-  * at build time; experimental methods take effect immediately).
-  */
 object GraftOptimizations {
-  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
-
-  // install() is called from every AsOf.joinAsOf; the read-check-append on
-  // the session's experimental lists is not atomic, so two threads building
-  // as-of joins concurrently could double-register a rule or drop one
-  // registration (round-8 advice). One global lock is enough — installs are
-  // rare and cheap, and a per-session lock would need a registry of its own.
-  //
-  // `withPowRewrite`: the pow rewrite changes floating-point RESULTS
-  // session-wide (pow(x,2) -> x*x differs from libm by ulps), which is
-  // the graft dialect's intended semantics (MathDsl's `^` sugar matches
-  // the reference's repeated-multiply) — but the as-of/LSH join entry
-  // points only need the planner STRATEGIES, and silently changing
-  // unrelated queries' doubles because a join ran first in the session
-  // is a side effect a caller can't see (round-13 review). Operator
-  // entry points pass false; the full-dialect surface (GraftExtensions,
-  // the board sessions, MathDsl consumers) keeps the default true.
-  //
-  // The session-build form also binds local checkpoint writes to
-  // `graft.streaming.LocalCheckpointFileManager` unless the caller chose
-  // a manager: Spark's default forks `chmod` per file without Hadoop's
-  // native library. Clones (`EngineSession.isolated`) inherit the key;
-  // operator entry points leave conf alone.
-  def install(spark: SparkSession, withPowRewrite: Boolean = true): Unit =
-    synchronized {
-      if (withPowRewrite) {
-        val current = spark.experimental.extraOptimizations
-        if (!current.contains(PowToMultiply))
-          spark.experimental.extraOptimizations = current :+ PowToMultiply
-        if (spark.conf.getOption(CheckpointManagerKey).isEmpty)
-          spark.conf.set(CheckpointManagerKey,
-            classOf[graft.streaming.LocalCheckpointFileManager].getName)
-      }
-      val strategies = spark.experimental.extraStrategies
-      if (!strategies.contains(AsOfJoinStrategy))
-        spark.experimental.extraStrategies = strategies :+ AsOfJoinStrategy
-      val strategies2 = spark.experimental.extraStrategies
-      if (!strategies2.contains(LshSelfJoinStrategy))
-        spark.experimental.extraStrategies = strategies2 :+ LshSelfJoinStrategy
-    }
-
-  /** `cloneSession()`, which copies the installed rules and runtime conf
-    * into the child, is `private[sql]`; this package reaches it.
+  /** Bound by `EngineSession.create` (builder conf, so every child
+    * session inherits it) and by [[install]]: Spark's default checkpoint
+    * manager forks `chmod` per local file without Hadoop's native library.
     */
-  def cloneSession(spark: SparkSession): SparkSession =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+  val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  val CheckpointManager: String =
+    classOf[graft.streaming.LocalCheckpointFileManager].getName
+
+  /** Whether `spark` plans with the graft dialect, from the extension or
+    * from [[install]].
+    */
+  def installed(spark: SparkSession): Boolean = {
+    val strategies = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.planner.strategies
+    strategies.contains(AsOfJoinStrategy) && strategies.contains(LshSelfJoinStrategy)
+  }
+
+  /** The precondition of every operator entry point. */
+  private[graft] def requireInstalled(spark: SparkSession): Unit =
+    require(installed(spark), "the graft dialect is not installed in this " +
+      "session: build it with graft.EngineSession.create, or set " +
+      "spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions")
+
+  /** The dialect for a session built outside the engine, without the
+    * extension: adds the rules to `spark.experimental` (which its
+    * `newSession()` children do not inherit) unless [[installed]] already
+    * holds, and binds the fork-free checkpoint manager unless the caller
+    * chose one. Nothing in the engine calls it.
+    */
+  def install(spark: SparkSession): Unit = {
+    if (!installed(spark)) {
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ PowToMultiply
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ AsOfJoinStrategy :+ LshSelfJoinStrategy
+    }
+    if (spark.conf.getOption(CheckpointManagerKey).isEmpty)
+      spark.conf.set(CheckpointManagerKey, CheckpointManager)
+  }
 }

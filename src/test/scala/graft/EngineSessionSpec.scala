@@ -9,7 +9,7 @@ import graft.streaming.FileReplay
   * caller's session only while the query starts (the query keeps it, the
   * caller gets its own values back, also on a failed start and under
   * concurrent starts), and an isolated child session keeps the graft
-  * rules the parent installed.
+  * dialect the parent was built with.
   */
 class EngineSessionSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -119,15 +119,39 @@ class EngineSessionSpec extends AnyFunSuite {
   }
 
   test("isolated sessions keep the graft rules and take their own conf") {
+    import org.apache.spark.sql.catalyst.expressions.Multiply
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.graft.{AsOf, AsOfJoinExec, GraftOptimizations}
     val child = EngineSession.isolated(spark, Parts -> "7")
     assert(child ne spark)
-    assert(child.experimental.extraOptimizations
-      .contains(org.apache.spark.sql.graft.PowToMultiply))
-    assert(child.experimental.extraStrategies
-      .contains(org.apache.spark.sql.graft.AsOfJoinStrategy))
-    assert(child.experimental.extraStrategies
-      .contains(org.apache.spark.sql.graft.LshSelfJoinStrategy))
+    assert(GraftOptimizations.installed(child))
+    val c = child.implicits
+    import c._
+    // the pow rewrite runs in the child's optimizer
+    val sq = child.range(1, 4).selectExpr("pow(CAST(id AS DOUBLE), 2.0) AS p")
+    val optimized = sq.queryExecution.optimizedPlan
+    assert(optimized.expressions.exists(_.exists(_.isInstanceOf[Multiply])),
+      s"pow(x, 2.0) not rewritten:\n$optimized")
+    assert(sq.as[Double].collect().toSeq == Seq(1.0, 4.0, 9.0))
+    // the as-of strategy plans the child's join
+    val left = Seq((1L, 10L, 1L)).toDF("k", "t", "id")
+    val right = Seq((1L, 5L, 2L)).toDF("rk", "rt", "rid")
+    val out = AsOf.joinAsOf(left, right, "k", "rk", "t", "rt", "id", "rid")
+    assert(out.count() == 1)
+    val execs = new AdaptiveSparkPlanHelper {}
+      .collect(out.queryExecution.executedPlan) { case e: AsOfJoinExec => e }
+    assert(execs.nonEmpty, s"no AsOfJoinExec:\n${out.queryExecution.executedPlan}")
     assert(child.conf.get(Parts) == "7")
     assert(spark.conf.get(Parts) != "7")
+  }
+
+  test("sessions from create and their newSession() resolve the graft SQL functions") {
+    for (s <- Seq(spark, spark.newSession())) {
+      val r = s.sql("SELECT nmea_valid('$GPGLL,4916.45,N,12311.12,W,225444,A,*1D') " +
+        "AS ok, nmea_valid('$GPGLL,4916.45,N,12311.12,W,225444,A,*1E') AS bad, " +
+        "crc16_modbus('123456789') AS crc").head()
+      assert(r.getBoolean(0) && !r.getBoolean(1))
+      assert(r.getInt(2) == 0x4B37) // the CRC-16/MODBUS check value
+    }
   }
 }

@@ -97,13 +97,10 @@ class FingerprintSpec extends AnyFunSuite {
 
   test("fingerprints are identical across two fresh sessions for every query") {
     def freshFingerprints(): Map[String, (String, String)] = {
-      // getOrCreate would hand back the shared test session; build a truly
-      // fresh one (new session state, new expr-id counters) off a new config
+      // getOrCreate would hand back the shared test session; a child has
+      // fresh session state, the engine's build conf (untruncated scan
+      // metadata included) and the graft dialect, as Bench's sessions do
       val s = SparkTestSession.spark.newSession()
-      // mirror Bench's session conf: metadata truncation applies to the raw
-      // string, so expr-id width decides WHETHER it cuts — untruncated is the
-      // only stable rendering
-      s.conf.set("spark.sql.maxMetadataStringLength", "100000")
       // the cache manager is context-global: queries that .persist() in run 1
       // would otherwise surface as InMemoryRelation in run 2's plans — a
       // test-harness artifact a fresh JVM (the case under test) never sees

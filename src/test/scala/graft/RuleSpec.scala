@@ -2,14 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import org.apache.spark.sql.graft.GraftOptimizations
-
 class RuleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("PowToMultiply rewrites pow(x, small int) to a multiply chain") {
-    GraftOptimizations.install(spark)
     val df = Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
       .selectExpr("l_quantity AS x", "pow(l_quantity, 2) AS p2",
         "pow(l_quantity, 3) AS p3", "pow(l_quantity, 2.5) AS pfrac")
