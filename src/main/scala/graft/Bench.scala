@@ -1,14 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.security.MessageDigest
+import scala.jdk.CollectionConverters._
 
-/** Benchmark main. Runs every registered query `reps` times (default 3) and
-  * reports the per-query MIN wall-time, so one co-tenant load spike on the
-  * bench host can't masquerade as a plan regression (the round-2 verdict
-  * flagged 13 rows whose only evidence of "regression" was a loaded host).
-  * Alongside each timing it emits a plan fingerprint — a stable hash of the
-  * physical-plan node sequence — so a timing change with an unchanged
-  * fingerprint is attributable to the environment, not the plan.
+/** Benchmark main. Runs every selected query serially, in name order, on the
+  * engine session, and reports each row's MIN wall-time over `reps` runs, so
+  * one co-tenant load spike on the bench host can't masquerade as a plan
+  * regression. Alongside each timing it records a plan fingerprint — a
+  * stable hash of the physical-plan node sequence — so a timing change with
+  * an unchanged fingerprint is attributable to the environment, not the
+  * plan. A fixture-independent host probe, run through the pass, labels the
+  * record quiet or loaded; per-row times and plans go to the record file,
+  * and stdout ends in one short summary line.
   */
 object Bench {
   /** Stable fingerprint of the physical plan shape. Collecting node
@@ -194,550 +198,270 @@ object Bench {
     md5.take(4).map(b => f"$b%02x").mkString
   }
 
+  /** The committed record's fixture; only a full board over it writes
+    * `bench_last.json` and the history. */
+  private val DefaultSf = "/root/testdata/sf0.1"
+
+  /** The bench's whole configuration; every record prints it. */
+  private[graft] final case class Config(sf: String, master: String,
+      cpus: Int, reps: Int) {
+    def isLocal: Boolean = master.startsWith("local[")
+    def json: String = s"""{"sf":${jsonStr(sf)},"master":${jsonStr(master)},""" +
+      s""""cpus":$cpus,"reps":$reps}"""
+  }
+
+  private[graft] object Config {
+    def fromEnv(): Config = {
+      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+      Config(
+        sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSf),
+        // multi-process cluster mode — see Verify: same env knobs, default
+        // stays the driver's local[N] contract
+        master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"),
+        cpus = cpus,
+        reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1))
+    }
+  }
+
+  /** One board row: its min seconds over the reps, and the fingerprint of
+    * its first successful rep ("err" when every rep failed). */
+  private[graft] final case class RowResult(name: String, sec: Double,
+      plan: String)
+
+  /** File-replay harness rows: their cost is per-micro-batch state commits,
+    * linear in replayed rows by construction, not operator plan cost, so
+    * the record sums them apart from the operator rows. */
+  private[graft] def isReplay(name: String): Boolean =
+    name.startsWith("st_stream_") || name.startsWith("dd_stream_")
+
+  /** Label a pass by its WORST host probe: one co-tenant burst late in the
+    * board (r15's w_sliding 0.2 → 13.4 s) must not average away under
+    * quiet probes elsewhere. No probe measured → "uncalibrated". */
+  private[graft] def recordQuality(probes: Seq[Double], gate: Double): String =
+    if (probes.isEmpty) "uncalibrated"
+    else if (probes.max <= gate) "quiet"
+    else "loaded"
+
+  /** Host-probe gate: twice the median of the quiet `host_canary_mean`
+    * values recorded in `history` under THIS host fingerprint, floored so a
+    * pristine history can't make normal jitter "loaded". A different
+    * physical host has a genuinely different quiet floor, so entries from
+    * other fingerprints (and entries predating the field) are skipped and
+    * the default floor re-seeds. Cluster probes pay the RPC round, so they
+    * admit a wider quiet band, and with no cluster history there is no
+    * principled prior: None, and the record is "uncalibrated". */
+  private[graft] def hostGate(history: Seq[String], hostFp: String,
+      isLocal: Boolean): Option[Double] = {
+    val quiet = history
+      .filter(l => "\"host_fp\":\"([^\"]+)\"".r.findFirstMatchIn(l)
+        .exists(_.group(1) == hostFp))
+      .flatMap(l => "\"host_canary_mean\":([0-9.]+)".r.findFirstMatchIn(l)
+        .map(_.group(1).toDouble))
+      .filter(c => c > 0 && c <= (if (isLocal) 1.0 else 3.0))
+    if (quiet.isEmpty && !isLocal) None
+    else {
+      val median = if (quiet.isEmpty) 0.25 else quiet.sorted.apply(quiet.size / 2)
+      Some(math.max(0.5, 2.0 * median))
+    }
+  }
+
+  /** The record's summary: the last stdout line, and the head of the record
+    * file. Its size does not grow with the row count (the driver keeps only
+    * the tail of stdout); per-row times and plans live in the file alone.
+    * `value` is the sum of every row's min time: operator rows (`ops_sec`)
+    * plus replay rows timed solo (`replay_solo_sec`). */
+  private[graft] def summary(rows: Seq[RowResult], probes: Seq[Double],
+      gate: Option[Double], hostFp: String, conf: Config,
+      recordPath: String): String = {
+    val (replay, ops) = rows.partition(r => isReplay(r.name))
+    val opsSec = dec(ops.map(_.sec).sum)
+    val replaySec = dec(replay.map(_.sec).sum)
+    val timed = rows.map(_.sec).filter(_ > 0)
+    val geomean =
+      if (timed.isEmpty) None
+      else Some(math.exp(timed.map(math.log).sum / timed.size))
+    val probeMean =
+      if (probes.isEmpty) None else Some(probes.sum / probes.size)
+    val quality = gate.fold("uncalibrated")(recordQuality(probes, _))
+    s"""{"metric":"total","value":${plain(opsSec + replaySec)},"unit":"sec",""" +
+      s""""ops_sec":${plain(opsSec)},"replay_solo_sec":${plain(replaySec)},""" +
+      s""""rows":${rows.size},"errors":${rows.count(_.plan == "err")},""" +
+      s""""geomean_sec":${opt(geomean)},"record_quality":"$quality",""" +
+      s""""host_canary_mean":${opt(probeMean)},""" +
+      s""""host_canary_max":${opt(probes.maxOption)},""" +
+      s""""host_canary_gate":${opt(gate)},"host_fp":${jsonStr(hostFp)},""" +
+      s""""config":${conf.json},"record":${jsonStr(recordPath)}}"""
+  }
+
+  private def dec(d: Double): BigDecimal =
+    BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+  private def plain(d: BigDecimal): String = d.bigDecimal.toPlainString
+  private def num(d: Double): String = plain(dec(d))
+  /** An unmeasured value is JSON null. */
+  private def opt(d: Option[Double]): String = d.fold("null")(num)
+
+  private def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  private def jsonObj(kv: Seq[(String, String)]): String =
+    kv.map { case (k, v) => jsonStr(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** Memory-sink hygiene (round-10 100x sweep: the JVM OOMed in the
+    * dd_stream_* rows): every streaming parity row registers a memory-sink
+    * temp view whose rows live on the driver until the view is dropped. */
+  private def dropTempViews(spark: SparkSession): Unit =
+    try spark.catalog.listTables().collect()
+      .filter(_.isTemporary).foreach(t => spark.catalog.dropTempView(t.name))
+    catch { case _: Throwable => }
+
+  private def releaseCaches(spark: SparkSession): Unit = {
+    graft.operators.TextOps.releasePriorCaches()
+    spark.catalog.clearCache()
+  }
+
+  /** Time one row as the min of `reps` runs and fingerprint its first
+    * successful run.
+    *
+    * The cache-registry state each query fingerprints (and first executes)
+    * against is pinned EMPTY. Round-8 postmortem: the LRU registry made a
+    * query's plan depend on which OTHER board rows ran before it — adding
+    * any row shifted the alphabetical order and churned 174/246
+    * fingerprints between same-code runs. With a per-row reset, rep 1
+    * derives the query's own caches from scratch (deterministic), later
+    * reps hit them, and the min still reports the warm steady state. Until
+    * a fingerprint is recorded every rep re-pins: a rep that died after
+    * registering frames would otherwise leave them for the next one. The
+    * first successful rep is the one fingerprinted, matching
+    * FingerprintSpec's clearCache-then-fingerprint convention.
+    */
+  private def timeRow(spark: SparkSession, conf: Config, name: String,
+      fn: (SparkSession, String) => DataFrame): RowResult = {
+    var fp = "err"
+    val times = (1 to conf.reps).map { _ =>
+      dropTempViews(spark)
+      if (fp == "err") releaseCaches(spark)
+      val t0 = System.nanoTime()
+      try {
+        val df = fn(spark, conf.sf)
+        df.count()
+        if (fp == "err") fp = planFingerprint(df)
+      } catch { case _: Throwable => }
+      (System.nanoTime() - t0) / 1e9
+    }
+    // release the last rep's sink rows now, not at the next row
+    dropTempViews(spark)
+    RowResult(name, times.min, fp)
+  }
+
+  /** Fixture-independent host-load probe: a range-sum whose cost is pure
+    * CPU + scheduler, so its quiet floor is a property of the HOST,
+    * comparable across every fixture scale. 1M rows PER CORE, one partition
+    * per core: per-core work is constant, so the floor is comparable across
+    * SPARK_GRAFT_CPUS settings too. pmod bounds each value under 1e6 so the
+    * sum stays far inside long range under ANSI. Cluster mode adds one
+    * fixed SMALL shuffle (1024 keys, 200k rows/core) so the probe crosses
+    * the executor JVM boundary and its floor moves with RPC latency + serde
+    * pressure like the board's exchanges; it gets its own host fingerprint
+    * so the two histories never mix.
+    */
+  private def hostProbe(spark: SparkSession, conf: Config): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0L, 1000000L * conf.cpus, 1, conf.cpus)
+      .selectExpr("sum(pmod(id * 31, 1000007)) AS s").head()
+    if (!conf.isLocal)
+      spark.range(0L, 200000L * conf.cpus, 1, conf.cpus)
+        .selectExpr("pmod(id, 1024) AS k", "id")
+        .groupBy("k").agg(org.apache.spark.sql.functions.sum("id").as("s"))
+        .selectExpr("sum(s)").head()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  private val HostProbeEvery = 40 // plus one at the start and one at the end
+
+  /** A missing or unreadable history is an empty one. */
+  private def readLines(file: String): Seq[String] =
+    try Files.readAllLines(Paths.get(file)).asScala.toSeq
+    catch { case _: Throwable => Seq.empty }
+
   def main(args: Array[String]): Unit = {
-    // Wall-clock deadline (round-14 verdict task 1): the r14 32-core bench
-    // died rc 124 — the driver's window expired INSIDE the quality-gate
-    // retry loop (3 passes x ~30 min on a degraded host) and no one-line
-    // JSON was ever printed, so the round produced no perf comparison at
-    // all. A loaded record labeled "loaded" is strictly more useful than
-    // no record: once the elapsed wall exceeds the deadline the retry
-    // loop stops and the best pass so far is emitted with its honest
-    // record_quality label. The deadline gates RETRIES (and the optional
-    // solo replay tier), never a pass in flight — the board itself is
-    // never truncated, so `queries` always carries every row.
-    val benchT0 = System.nanoTime()
-    def elapsedSec: Double = (System.nanoTime() - benchT0) / 1e9
-    val deadlineSec = sys.env
-      .getOrElse("SPARK_GRAFT_BENCH_DEADLINE_SEC", "1800").toDouble
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    // multi-process cluster mode (round-10 verdict task 1) — see Verify:
-    // same env knobs, default stays the driver's local[N] contract
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    val conf = Config.fromEnv()
     // batch conf and the graft dialect come from EngineSession; replay
     // rows scope their streaming conf per query (FileReplay.start)
-    val spark = EngineSession.create(master, cpus.toInt)
+    val spark = EngineSession.create(conf.master, conf.cpus)
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (parquet reader, codegen, shuffle machinery) so the
     // first measured query doesn't absorb JVM start-up costs
     try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    // the probe's own first run pays its codegen and JIT (0.73 s against
+    // 0.16-0.34 s for the rest of a 4-core sf0.1 pass); labeling by the
+    // worst probe would turn that into "loaded" every time
+    try hostProbe(spark, conf) catch { case _: Throwable => }
     // optional query-name filter for iterating on a single row's timing
     val only = args.toSet
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(only).toMap
+    val selected = SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.isEmpty || only(name) }.sortBy(_._1)
 
-    // Concurrent-board mode (round-9 verdict task 4): a production
-    // pipeline runs stages concurrently on ONE session, so the board
-    // must hold up under contention — shared cache registry, shared
-    // CacheManager, concurrent jobs. N worker threads drain the query
-    // list; per-query times are wall-clock under contention (reported
-    // for context, not comparable to the serial record), the headline is
-    // board wall time and the serial-sum/wall speedup. No per-query
-    // registry pinning or fingerprints here — the registry is shared
-    // state BY DESIGN in this mode, and ConcurrencySpec pins that results
-    // stay equal to the serial board under exactly that sharing.
-    val concurrency =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_CONCURRENCY", "0").toInt
-    if (concurrency > 1) {
-      graft.operators.TextOps.releasePriorCaches()
-      spark.catalog.clearCache()
-      graft.operators.TextOps.resetCacheStats()
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(concurrency)
-      val t0 = System.nanoTime()
-      // replay-harness rows excluded: their time is micro-batch commit
-      // latency of a fixture replay, not a concurrent-stage shape
-      // (ConcurrencySpec documents the same exclusion)
-      val futs = selected.toSeq.sortBy(_._1)
-        .filterNot { case (n, _) =>
-          n.startsWith("st_stream_") || n.startsWith("dd_stream_") }
-        .map { case (name, fn) =>
-        name -> pool.submit(new java.util.concurrent.Callable[(Double, String)] {
-          override def call(): (Double, String) = {
-            val s0 = System.nanoTime()
-            val st =
-              try { fn(spark, sfDir).count(); "ok" }
-              catch { case _: Throwable => "err" }
-            ((System.nanoTime() - s0) / 1e9, st)
-          }
-        })
-      }
-      val results = futs.map { case (n, f) => val (t, st) = f.get(); (n, t, st) }
-      val wall = (System.nanoTime() - t0) / 1e9
-      pool.shutdown()
-      val serialSum = results.map(_._2).sum
-      val errs = results.count(_._3 == "err")
-      val (h, m, e) = graft.operators.TextOps.cacheStats
-      val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + f"$v%.4f" }
-        .mkString("{", ",", "}")
-      val line =
-        s"""{"metric":"concurrent_wall","value":${f"$wall%.4f"},"unit":"sec","concurrency":$concurrency,"queries":$qs,"serial_sum_sec":${f"$serialSum%.4f"},"speedup":${f"${serialSum / wall}%.3f"},"errors":$errs,"sf":"$sfDir","cache_registry":{"hits":$h,"misses":$m,"evictions":$e}}"""
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_concurrent_last.json"),
-        (line + "\n").getBytes("UTF-8"))
-      spark.stop()
-      println(line)
-      return
-    }
-
-    // Memory-sink hygiene (round-10 100x sweep: the JVM OOMed in the
-    // dd_stream_* tier): every streaming parity row registers a
-    // memory-sink temp view whose rows live on the driver until the view
-    // is dropped — at large fixtures that is millions of rows per rep,
-    // accumulating across the whole board. Drop all temp views at each
-    // rep boundary; by then the previous rep's result has been fully
-    // consumed (counted + fingerprinted).
-    def dropTempViews(): Unit =
-      try spark.catalog.listTables().collect()
-        .filter(_.isTemporary).foreach(t => spark.catalog.dropTempView(t.name))
-      catch { case _: Throwable => }
-
-    // Fixture-independent host-load probe (round-11 verdict task 4): the
-    // fn_/op_ canary scans FIXTURE data, so its quiet floor moves with the
-    // fixture scale and the rolling-median gate is only calibrated for the
-    // committed sf0.1 board — a quiet 100x sweep used to self-label
-    // "loaded". This probe never touches the fixture: a fixed 32M-row
-    // range-sum whose cost is pure CPU + scheduler, so its quiet floor is
-    // a property of the HOST, comparable across every fixture scale. It
-    // is interleaved through the pass (a probe only at pass start would
-    // miss a mid-board co-tenant burst, which is how BENCH_r09's loaded
-    // record slipped through).
-    val isLocalMaster = master.startsWith("local[")
-    def hostProbe(): Double = {
-      val t0 = System.nanoTime()
-      // 1M rows PER CORE, one partition per core: per-core work is
-      // constant, so the quiet floor is comparable across SPARK_GRAFT_CPUS
-      // settings and the rolling-median gate can mix their history
-      // (review finding: a fixed 32M rows made a quiet 4-core run ~8x the
-      // 32-core floor and self-label "loaded"). pmod bounds each value
-      // under 1e6 so the sum stays far inside long range under ANSI.
-      spark.range(0L, 1000000L * cpus.toInt, 1, cpus.toInt)
-        .selectExpr("sum(pmod(id * 31, 1000007)) AS s").head()
-      // cluster mode additionally pays executor RPC/serde on every data
-      // path, which the pure-CPU round doesn't model — the reason cluster
-      // records used to stay "uncalibrated" (round-13 verdict task 5).
-      // Add one fixed SMALL shuffle (1024 keys, 200k rows/core) so the
-      // probe crosses the executor JVM boundary: its floor now moves with
-      // RPC latency + serde pressure exactly like the board's exchanges.
-      // The local probe is left untouched — the local history median
-      // stays calibrated — and the cluster probe gets its own host
-      // fingerprint (below) so the two histories never mix.
-      if (!isLocalMaster)
-        spark.range(0L, 200000L * cpus.toInt, 1, cpus.toInt)
-          .selectExpr("pmod(id, 1024) AS k", "id")
-          .groupBy("k").agg(org.apache.spark.sql.functions.sum("id").as("s"))
-          .selectExpr("sum(s)").head()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val hostProbes = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val HostProbeEvery = 40 // ~8 probes over a 300-row board
-    def addHostProbe(): Unit =
-      // a probe failure must not kill a record run — hostMean() returning
-      // the -1 sentinel labels the record "uncalibrated" instead
-      try hostProbes += hostProbe() catch { case _: Throwable => }
-
-    def isReplay(k: String) =
-      k.startsWith("st_stream_") || k.startsWith("dd_stream_")
-    // Replay-tier concurrency (round-11 verdict task 5): the 14 streaming
-    // parity rows cost ~23% of the board, all of it micro-batch commit
-    // latency serialized on one thread — harness-bound, not engine-bound
-    // (the concurrent board runs the queries themselves at ~8x/8 threads).
-    // Each row runs on an isolated child session (EngineSession.isolated,
-    // which keeps the graft dialect): memory-sink temp views and streaming
-    // query names are session-/epoch-scoped; each row sets its streaming
-    // conf only while its query starts (FileReplay.start, under one lock);
-    // FileReplay's staged LRU is refcount-pinned against cross-thread
-    // eviction.
-    // ReplayConcurrencySpec pins serial-equality of results.
-    // Default scales with the core budget instead of pinning the r12
-    // constant 4 (the guide's scale-adaptive-settings rule): the tier is
-    // micro-batch commit-latency-bound, so wide concurrency still leaves
-    // the executor pool underloaded. Round-15 widened the 32-core ceiling
-    // from 8 to cpus/2 (capped 16) so the whole 13-row tier runs as ONE
-    // wave: with 8 threads the heaviest rows (alphabetically late —
-    // st_stream_late/session/topk) started only as the first wave
-    // drained, serializing the tail (guide §2.6) — measured tier wall
-    // 62.2 s two-wave vs 20.2 s single-wave on identical rows. At the
-    // driver's low-core rerun (8 cores) the default stays the measured 4.
-    val replayConcurrency = sys.env
-      .getOrElse("SPARK_GRAFT_REPLAY_CONCURRENCY",
-        math.min(16, math.max(4, cpus.toInt / 2)).toString).toInt.max(1)
-    var replayWallOfPass = 0.0
-
-    def runReplayTier(rows: Seq[(String,
-        (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-        conc: Int = replayConcurrency)
-        : Seq[(String, Double, String)] = {
-      replayWallOfPass = 0.0
-      if (rows.isEmpty) return Seq.empty
-      // one pinned empty cache state for the whole tier (replay rows'
-      // sink-scan fingerprints don't depend on the registry; per-row
-      // clearing from racing threads would interfere with siblings)
-      graft.operators.TextOps.releasePriorCaches()
-      spark.catalog.clearCache()
-      val pool =
-        java.util.concurrent.Executors.newFixedThreadPool(conc)
-      val t0 = System.nanoTime()
-      val futs = rows.map { case (name, fn) =>
-        name -> pool.submit(
-          new java.util.concurrent.Callable[(Double, String)] {
-            override def call(): (Double, String) = {
-              val sess = EngineSession.isolated(spark)
-              def dropViews(): Unit =
-                try sess.catalog.listTables().collect().filter(_.isTemporary)
-                  .foreach(t => sess.catalog.dropTempView(t.name))
-                catch { case _: Throwable => }
-              var fp = "err"
-              // one rep by default: min-of-reps exists so a host-load
-              // spike can't masquerade as a plan regression, but replay
-              // timings are contended (not regression-comparable) and
-              // plan changes are caught by the fingerprint — paying 3
-              // replays per row buys nothing the board metric uses
-              val replayReps = sys.env
-                .getOrElse("SPARK_GRAFT_REPLAY_REPS", "1").toInt.max(1)
-              val times = (1 to replayReps).map { _ =>
-                dropViews() // memory-sink hygiene, clone-local
-                val s0 = System.nanoTime()
-                try {
-                  val df = fn(sess, sfDir)
-                  df.count()
-                  if (fp == "err") fp = planFingerprint(df)
-                } catch { case _: Throwable => }
-                (System.nanoTime() - s0) / 1e9
-              }
-              dropViews() // release the last rep's sink rows NOW, not at GC
-              (times.min, fp)
-            }
-          })
-      }
-      val rs = futs.map { case (n, f) => val (t, fp) = f.get(); (n, t, fp) }
-      pool.shutdown()
-      replayWallOfPass = (System.nanoTime() - t0) / 1e9
-      // every tier row has been counted and fingerprinted — the psink
-      // parquet dirs the heavy parity rows wrote are dead weight now;
-      // reclaim them so multi-pass boards don't fill the tmp volume.
-      // Mark-scoped: only dirs that exist NOW (this tier's and older)
-      // are purged, so a hypothetical concurrent replay elsewhere in the
-      // JVM keeps its fresher dirs (round-14 ADVICE)
-      graft.streaming.FileReplay.purgePsinks(
-        graft.streaming.FileReplay.psinkMark())
-      rs
-    }
-
-    def runPass(): Seq[(String, Double, String)] = {
+    // probes interleave the pass: one at the start alone would miss a
+    // mid-board co-tenant burst, and the closing one covers the last rows.
+    // A probe failure must not kill a record run; no probe at all labels
+    // the record "uncalibrated".
+    val probes = scala.collection.mutable.ArrayBuffer.empty[Double]
+    def probe(): Unit =
+      try probes += hostProbe(spark, conf) catch { case _: Throwable => }
     // count registry behavior over the measured pass only, not the warm-up
     graft.operators.TextOps.resetCacheStats()
-    hostProbes.clear()
-    addHostProbe()
-    var sinceProbe = 0
-    val (replayRows, opsRows) =
-      selected.toSeq.sortBy(_._1).partition(r => isReplay(r._1))
-    val opsResults = opsRows.map { case (name, fn) =>
-      // Pin the cache-registry state each query fingerprints (and first
-      // executes) against: EMPTY. Round-8 postmortem: the LRU registry made
-      // a query's plan depend on which OTHER board rows ran before it —
-      // adding any row shifted the alphabetical order and churned 174/246
-      // fingerprints between same-code runs, destroying the
-      // "unchanged fingerprint ⇒ environment, not plan" attribution. With a
-      // per-query reset, rep 1 derives the query's own caches from scratch
-      // (deterministic), reps 2-3 hit them, and min-of-3 still reports the
-      // warm steady state — only bench wall-time pays, never the metric.
-      // This also removes eviction-order interference between rows, the
-      // other suspect in the round-8 j_inner 0.40→3.42 s spread.
-      graft.operators.TextOps.releasePriorCaches()
-      spark.catalog.clearCache()
-      var fp = "err"
-      var pinned = true
-      val times = (1 to reps).map { _ =>
-        dropTempViews()
-        // if rep 1 died AFTER trackCache registered frames, a later rep's
-        // fingerprint would render against a non-empty registry — re-pin
-        // until a fingerprint has actually been recorded (review finding)
-        if (fp == "err" && !pinned) {
-          graft.operators.TextOps.releasePriorCaches()
-          spark.catalog.clearCache()
-          pinned = true
-        }
-        val t0 = System.nanoTime()
-        try {
-          val df = fn(spark, sfDir)
-          df.count()
-          // fingerprint the FIRST successful rep only: it is built against
-          // the pinned empty cache state, matching FingerprintSpec's
-          // clearCache-then-fingerprint convention (later reps see rep 1's
-          // own cached frames substituted in — deterministic too, but a
-          // different rendering than the spec pins)
-          if (fp == "err") fp = planFingerprint(df)
-          pinned = false
-        } catch { case _: Throwable => pinned = false }
-        (System.nanoTime() - t0) / 1e9
-      }
-      sinceProbe += 1
-      if (sinceProbe >= HostProbeEvery) { addHostProbe(); sinceProbe = 0 }
-      (name, times.min, fp)
+    probe()
+    val rows = selected.zipWithIndex.map { case ((name, fn), i) =>
+      val row = timeRow(spark, conf, name, fn)
+      // the row is counted and fingerprinted: its parquet sink dirs are
+      // dead weight now
+      if (isReplay(name)) graft.streaming.FileReplay.purgePsinks()
+      if ((i + 1) % HostProbeEvery == 0 || i == selected.size - 1) probe()
+      row
     }
-    // the replay tier runs AFTER the serial ops rows (its concurrency
-    // would contend with their timings otherwise), sorted back in by name
-    (opsResults ++ runReplayTier(replayRows)).sortBy(_._1)
-    }
+    val (hits, misses, evictions) = graft.operators.TextOps.cacheStats
 
-    def canaryOf(rs: Seq[(String, Double, String)]): Double = {
-      // Canary: the mean of the trivial fn_/op_ projection rows. Their
-      // clean floor is ~0.10 s (docs/ENGINEERING_NOTES.md bench-noise
-      // protocol); a run whose canary mean is well above that is a
-      // co-tenant load window, not a plan regression.
-      val rows = rs.filter { case (k, _, _) =>
-        k.startsWith("fn_") || k.startsWith("op_") }
-      if (rows.isEmpty) -1.0 else rows.map(_._2).sum / rows.size
-    }
-    // Self-defending record (round-9 verdict task 2: BENCH_r09's official
-    // 312.5 s total was a 6x-loaded window over a 116.5 s quiet board).
-    // The acceptance threshold is 2x the rolling quiet median of recorded
-    // canaries in bench_history.jsonl (floored at 0.25 s so a pristine
-    // history can't make normal jitter a rejection); a pass measured under
-    // a hotter canary is REJECTED and re-run, up to 3 passes, keeping the
-    // quietest. The artifact then carries the canary, the threshold, and a
-    // record_quality verdict so no later round adjudicates a loaded number.
-    val canaryGate: Double = {
-      val hist = try {
-        val p = java.nio.file.Paths.get("bench_history.jsonl")
-        if (java.nio.file.Files.exists(p))
-          scala.jdk.CollectionConverters.ListHasAsScala(
-            java.nio.file.Files.readAllLines(p)).asScala.toSeq
-            .flatMap { l =>
-              val m = "\"canary_mean\":([0-9.]+)".r.findFirstMatchIn(l)
-              m.map(_.group(1).toDouble)
-            }
-        else Seq.empty
-      } catch { case _: Throwable => Seq.empty[Double] }
-      val quiet = hist.filter(c => c > 0 && c <= 0.30)
-      val median =
-        if (quiet.isEmpty) 0.125
-        else quiet.sorted.apply(quiet.size / 2)
-      math.max(0.25, 2.0 * median)
-    }
-    // Host fingerprint recorded with every history entry: the probe is
-    // per-core-constant so SPARK_GRAFT_CPUS alone doesn't move its floor,
-    // but a DIFFERENT physical host (fewer/slower cores, throttled CI)
-    // has a genuinely different quiet floor — mixing its probes into one
-    // shared history miscalibrates the 2x gate (round-12 ADVICE). The
-    // fingerprint is the physical core count + probe thread count; the
-    // median below only consumes entries from a matching fingerprint.
-    // the cluster probe includes the RPC shuffle round, so its floor is a
-    // DIFFERENT quantity — a distinct fingerprint keeps the two medians
-    // from mixing, and cluster runs keep their own history file
-    val hostFp: String =
-      s"${Runtime.getRuntime.availableProcessors}c/${cpus}t" +
-        (if (isLocalMaster) "" else "/rpc")
+    // The fingerprint is the physical core count + probe thread count, plus
+    // "/rpc" for the cluster probe (a different quantity): the gate only
+    // reads history entries with a matching fingerprint.
+    val hostFp = s"${Runtime.getRuntime.availableProcessors}c/${conf.cpus}t" +
+      (if (conf.isLocal) "" else "/rpc")
     val historyFile =
-      if (isLocalMaster) "bench_history.jsonl" else "bench_cluster_history.jsonl"
-    // Host-probe gate: rolling quiet median of recorded host canaries
-    // (any fixture — the probe is fixture-independent by construction),
-    // restricted to THIS host fingerprint (entries predating the
-    // fingerprint field are skipped — the default floor re-seeds), and
-    // floored so a pristine history can't make normal jitter a rejection.
-    // Cluster mode with an EMPTY history returns the -1 sentinel — there
-    // is no principled prior for an RPC floor, so the first cluster
-    // record self-labels "uncalibrated" and every later one is gated by
-    // the recorded median (round-13 verdict task 5).
-    val hostGate: Double = {
-      val hist = try {
-        val p = java.nio.file.Paths.get(historyFile)
-        if (java.nio.file.Files.exists(p))
-          scala.jdk.CollectionConverters.ListHasAsScala(
-            java.nio.file.Files.readAllLines(p)).asScala.toSeq
-            .filter(l =>
-              "\"host_fp\":\"([^\"]+)\"".r.findFirstMatchIn(l)
-                .exists(_.group(1) == hostFp))
-            .flatMap { l =>
-              val m = "\"host_canary_mean\":([0-9.]+)".r.findFirstMatchIn(l)
-              m.map(_.group(1).toDouble)
-            }
-        else Seq.empty
-      } catch { case _: Throwable => Seq.empty[Double] }
-      // cluster probes pay the RPC round: admit a wider quiet band
-      val quiet = hist.filter(c => c > 0 && c <= (if (isLocalMaster) 1.0 else 3.0))
-      if (quiet.isEmpty && !isLocalMaster) -1.0
-      else {
-        val median =
-          if (quiet.isEmpty) 0.25
-          else quiet.sorted.apply(quiet.size / 2)
-        math.max(0.5, 2.0 * median)
-      }
+      if (conf.isLocal) "bench_history.jsonl" else "bench_cluster_history.jsonl"
+    val gate = hostGate(readLines(historyFile), hostFp, conf.isLocal)
+    // bench_last.json is ONLY the full-board record on the committed
+    // fixture (a 10x subset run once overwrote the committed sf0.1 record
+    // silently); a name-filtered or alternate-fixture run writes a subset
+    // file, and a multi-process record is comparable only to other cluster
+    // runs — four distinct artifacts, no crosstalk. Full boards append to
+    // their history so later runs can diff per-row timings and the gate
+    // self-calibrates.
+    val fullBoard = only.isEmpty && conf.sf.stripSuffix("/") == DefaultSf
+    val lastFile = (conf.isLocal, fullBoard) match {
+      case (true, true) => "bench_last.json"
+      case (true, false) => "bench_subset_last.json"
+      case (false, true) => "bench_cluster_last.json"
+      case (false, false) => "bench_cluster_subset_last.json"
     }
-    val maxPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    // The fn_/op_ gate's rolling median comes from LOCAL-MODE sf0.1
-    // full-board history, so it is only meaningful against that exact
-    // fixture AND master: at a 10x/100x scale fixture the canary rows
-    // scan 10-100x the data; at sf0.01/sf0.001 they scan 10-100x LESS.
-    // Alternate LOCAL fixtures are instead gated/labeled by the
-    // fixture-independent host probe (round-11 task 4: a quiet 100x sweep
-    // used to self-label "loaded"). Cluster mode is gated by the
-    // RPC-aware probe variant against its OWN history median (round-13
-    // task 5) — first-ever cluster run stays "uncalibrated" (gate = -1).
-    val isCalibratedFixture =
-      sfDir.stripSuffix("/") == "/root/testdata/sf0.1"
-    val gateApplies = isCalibratedFixture && isLocalMaster
-    val hostGateApplies =
-      (isLocalMaster && !isCalibratedFixture) ||
-        (!isLocalMaster && hostGate > 0)
-    def hostMean(): Double =
-      if (hostProbes.isEmpty) -1.0 else hostProbes.sum / hostProbes.size
-    var best: Seq[(String, Double, String)] = runPass()
-    var bestCanary = canaryOf(best)
-    var bestHost = hostMean()
-    var bestReplayWall = replayWallOfPass
-    var passes = 1
-    while (((gateApplies && bestCanary > canaryGate) ||
-        (hostGateApplies && bestHost > hostGate)) && passes < maxPasses
-        && elapsedSec < deadlineSec) {
-      System.err.println(f"[bench] canary $bestCanary%.4f (gate " +
-        f"$canaryGate%.4f) host $bestHost%.4f (gate $hostGate%.4f) - " +
-        f"rejecting loaded pass ${passes} and re-running " +
-        f"(${elapsedSec}%.0f s of ${deadlineSec}%.0f s deadline used)")
-      val again = runPass()
-      val c = canaryOf(again)
-      val h = hostMean()
-      val better =
-        if (gateApplies) c < bestCanary
-        // a pass whose probes all failed reports the -1 sentinel — it is
-        // UNMEASURED, not quiet, and must never replace a measured pass
-        else h >= 0 && h < bestHost
-      if (better) {
-        best = again; bestCanary = c; bestHost = h
-        bestReplayWall = replayWallOfPass
-      }
-      passes += 1
-    }
-    if (((gateApplies && bestCanary > canaryGate) ||
-        (hostGateApplies && bestHost > hostGate)) && elapsedSec >= deadlineSec)
-      System.err.println(f"[bench] deadline ${deadlineSec}%.0f s reached " +
-        f"after $passes pass(es) - emitting best pass with its honest label")
-    val results = best
-    // Per-row replay SOLO timings (round-14 verdict task 10): the per-row
-    // replay values in `queries` are wall-under-contention, so a
-    // replay-concurrency default change (r13 conc 4 -> r14 clamp(cpus/4))
-    // makes them incomparable across rounds. One extra UNCONTENDED serial
-    // tier run per board records each replay row's solo time alongside the
-    // contended wall, so tier-row comparisons survive concurrency changes.
-    // Skipped when the deadline budget can't fit it (estimated by the
-    // contended per-row sum, an overestimate of the serial sum) or when
-    // SPARK_GRAFT_REPLAY_SOLO=0; never affects the headline value.
-    // capture registry stats BEFORE the solo tier below so the reported
-    // cache_registry keeps describing the measured pass, not the extra run
-    val (cHits, cMisses, cEvict) = graft.operators.TextOps.cacheStats
-    val soloMode = sys.env.getOrElse("SPARK_GRAFT_REPLAY_SOLO", "auto")
-    val replayRowsAll = selected.toSeq.sortBy(_._1).filter(r => isReplay(r._1))
-    val soloEstimate = results.filter(r => isReplay(r._1)).map(_._2).sum
-    val runSolo = replayConcurrency > 1 && replayRowsAll.nonEmpty &&
-      (soloMode == "1" ||
-        (soloMode != "0" && elapsedSec + 1.2 * soloEstimate < deadlineSec))
-    val (soloRows, soloWall) =
-      if (!runSolo) (Seq.empty[(String, Double, String)], -1.0)
-      else {
-        val rs = runReplayTier(replayRowsAll, conc = 1)
-        (rs, replayWallOfPass)
-      }
-    val recordQuality =
-      // canaryOf returns the -1.0 sentinel when the run has no fn_/op_
-      // rows at all (a name-filtered subset): there the host probe still
-      // measured something, so label by it on local masters. Cluster runs
-      // label by the RPC-aware probe against the cluster history median;
-      // with no history yet the gate is the -1 sentinel -> uncalibrated.
-      if (!isLocalMaster)
-        (if (hostGate > 0 && bestHost >= 0)
-          (if (bestHost <= hostGate) "quiet" else "loaded")
-         else "uncalibrated")
-      else if (gateApplies && bestCanary >= 0)
-        (if (bestCanary <= canaryGate) "quiet" else "loaded")
-      else if (bestHost >= 0)
-        (if (bestHost <= hostGate) "quiet" else "loaded")
-      else "uncalibrated"
-    // compact per-query seconds (4 decimals ≈ 0.1 ms resolution — bench noise
-    // floor) so the timings line stays as short as possible for the driver's
-    // bounded stdout capture; the fat plans map goes on its OWN line so a
-    // truncation can never cut the timings mid-line. The driver keeps the
-    // TAIL of its capture window (BENCH_r03/r04/r05 all parsed=null when the
-    // timings line led and the sbt epilogue filled the tail), so stop the
-    // JVM FIRST — Spark's shutdown banner would otherwise land after us —
-    // then print plans, then the timings line dead last.
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + f"$v%.4f" }
-      .mkString("{", ",", "}")
-    val plans = results.map { case (k, _, fp) => s"\"" + k + "\":\"" + fp + "\"" }
-      .mkString("{", ",", "}")
-    val canary = bestCanary
-    // Tier split (round-8 verdict task 5): the st_stream_/dd_stream_ rows
-    // are file-replay HARNESSES — their cost is per-micro-batch state
-    // commits, linear in replayed rows by construction, not operator plan
-    // cost — so the artifact separates them from the operator rows the 2x
-    // per-query gate is meant to police. Since round 12 the tier runs
-    // CONCURRENTLY (cloned sessions), so the headline `value` is the true
-    // board wall: ops sum + replay-tier WALL. The per-row replay timings
-    // in `queries` are wall-under-contention (reported for coverage, not
-    // comparable to pre-r12 serial rows); `replay_harness_sec` keeps
-    // their sum for reference.
-    val replayTotal = results.filter(r => isReplay(r._1)).map(_._2).sum
-    val opsTotal = results.map(_._2).sum - replayTotal
-    val total = opsTotal + bestReplayWall
-    val soloQs = soloRows.map { case (k, v, _) => s"\"" + k + "\":" + f"$v%.4f" }
-      .mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"total","value":${f"$total%.4f"},"unit":"sec","queries":$qs,"reps":$reps,"sf":"$sfDir","canary_mean":${f"$canary%.4f"},"canary_gate":${f"$canaryGate%.4f"},"host_canary_mean":${f"$bestHost%.4f"},"host_canary_gate":${f"$hostGate%.4f"},"host_fp":"$hostFp","record_quality":"$recordQuality","passes":$passes,"ops_sec":${f"$opsTotal%.4f"},"replay_harness_sec":${f"$replayTotal%.4f"},"replay_wall_sec":${f"$bestReplayWall%.4f"},"replay_concurrency":$replayConcurrency,"replay_solo":$soloQs,"replay_solo_wall_sec":${f"$soloWall%.4f"},"cache_registry":{"hits":$cHits,"misses":$cMisses,"evictions":$cEvict}}"""
-    // full artifact (timings + plans in one object) persisted to disk: the
-    // robust path when any stdout capture window truncates. Also append to
-    // bench_history.jsonl so round N+1 can diff per-query timings against
-    // every earlier run instead of totals only (round-5 verdict task 8).
-    // bench_last.json is ONLY the full-board record — a name-filtered or
-    // alternate-fixture run writes bench_subset_last.json instead (a 10x
-    // subset run once overwrote the committed sf0.1 record silently).
-    // contended_rows makes the artifact self-describing (round-13 verdict
-    // task 4): these rows timed under replay-tier contention
-    // (replay_concurrency threads), so their per-row values compare only
-    // to other contended runs — tools/bench_diff.py excludes them from
-    // per-row regression flags and diffs replay_wall_sec instead.
-    val contended =
-      (if (replayConcurrency > 1) results.filter(r => isReplay(r._1)).map(_._1)
-       else Seq.empty) // a serial tier (concurrency 1) is not contended
-        .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val line = summary(rows, probes.toSeq, gate, hostFp, conf,
+      Paths.get(lastFile).toAbsolutePath.toString)
     val full = line.dropRight(1) +
-      s""","contended_rows":$contended,"plans":$plans}""" + "\n"
-    // a multi-process (SPARK_GRAFT_MASTER) record is comparable only to
-    // other cluster-mode runs — keep it out of the local-mode record and
-    // its history (same reasoning as the subset-run split below).
-    // isCalibratedFixture (NOT a /root/testdata/ prefix) guards the
-    // committed record: the prefix also matches the sf0.001/sf0.01
-    // fixtures, so a full-board run at a smaller SF would silently
-    // overwrite the sf0.1 record and poison the canary history with
-    // 10-100x-smaller canaries — exactly the failure the guard exists
-    // to prevent.
-    val isFullBoard = only.isEmpty && isCalibratedFixture && isLocalMaster
-    val lastFile =
-      if (isFullBoard) "bench_last.json"
-      // the cluster record gets the SAME fixture guard as the local one
-      // (an alternate-fixture run must never overwrite the committed
-      // sf0.1 record), and name-filtered cluster runs stay out of the
-      // local-mode subset file — four distinct artifacts, no crosstalk
-      else if (!isLocalMaster && only.isEmpty && isCalibratedFixture)
-        "bench_cluster_last.json"
-      else if (!isLocalMaster) "bench_cluster_subset_last.json"
-      else "bench_subset_last.json"
-    java.nio.file.Files.write(java.nio.file.Paths.get(lastFile),
-      full.getBytes("UTF-8"))
-    if (isFullBoard)
-      java.nio.file.Files.write(java.nio.file.Paths.get("bench_history.jsonl"),
-        full.getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    // cluster full-board records build their own probe history so the
-    // RPC-aware gate self-calibrates from the second run on
-    if (!isLocalMaster && only.isEmpty && isCalibratedFixture)
-      java.nio.file.Files.write(java.nio.file.Paths.get(historyFile),
-        full.getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+      s""","queries":${jsonObj(rows.map(r => r.name -> num(r.sec)))}""" +
+      s""","plans":${jsonObj(rows.map(r => r.name -> jsonStr(r.plan)))}""" +
+      s""","host_probes":${probes.map(num).mkString("[", ",", "]")}""" +
+      s""","cache_registry":{"hits":$hits,"misses":$misses,"evictions":$evictions}}""" +
+      "\n"
+    Files.write(Paths.get(lastFile), full.getBytes("UTF-8"))
+    if (fullBoard)
+      Files.write(Paths.get(historyFile), full.getBytes("UTF-8"),
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    // the driver keeps the TAIL of stdout: stop the JVM's Spark FIRST so
+    // its shutdown banner can't land after the summary, which prints last
     spark.stop()
-    println(s"""{"plans":$plans}""")
     println(line)
   }
 }

@@ -300,8 +300,8 @@ object FileReplay {
   // plus checkpoint under java.io.tmpdir forever — filling disk across
   // multi-pass boards (round-13 ADVICE). Callers purge at a point where
   // every frame built from the dirs has been fully consumed (Bench: after
-  // the replay tier's futures have all been counted and fingerprinted;
-  // Verify: after each row's parquet write). A JVM shutdown hook covers
+  // each replay row has been counted and fingerprinted; Verify: after
+  // each row's parquet write). A JVM shutdown hook covers
   // every other exit path. Entries carry a creation epoch so a purge can
   // be scoped to "dirs that existed at my mark" — a concurrent caller's
   // fresher dirs (whose frames may still be lazily consumed) survive

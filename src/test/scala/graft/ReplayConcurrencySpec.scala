@@ -2,14 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-11 verdict task 5: the bench replay tier runs CONCURRENTLY on
-  * isolated child sessions since round 12. This spec pins what that
-  * requires: streaming parity rows executed simultaneously on
+/** A property of the engine, for its concurrent callers (the console,
+  * `GraftApp`): streaming parity rows executed simultaneously on
   * `EngineSession.isolated` children return exactly the rows they return
   * serially — the scoped streaming conf of each query start
   * (FileReplay.start) doesn't race, memory-sink names don't collide, and
   * FileReplay's staged-corpus LRU never evicts files a live concurrent
-  * handle still publishes from (refcount pin).
+  * handle still publishes from (refcount pin). The bench runs replay rows
+  * serially; this spec is what keeps concurrent replay correct.
   */
 class ReplayConcurrencySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark

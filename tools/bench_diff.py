@@ -1,22 +1,27 @@
 #!/usr/bin/env python3
 """Diff two bench artifacts (bench_last.json / bench_history.jsonl entries)
-per query, contended-aware (round-13 verdict task 4).
+per query.
 
-Rows listed in the NEWER artifact's `contended_rows` timed under
-replay-tier thread contention, so their per-row values are only
-comparable to other contended runs: they are excluded from the per-row
-regression flags and summarized through `replay_wall_sec` instead.
-Artifacts predating the tag (no `contended_rows` field) get the r12
-heuristic: st_stream_/dd_stream_ rows are treated as contended when the
-artifact records replay_concurrency > 1.
+Every row of a current record is timed solo: replay rows run serially in
+the same loop as the operator rows. Records written before that change
+timed their st_stream_/dd_stream_ rows under replay-tier thread
+contention and list them in `contended_rows`; those per-row values
+compare only to other contended runs, so rows listed in EITHER artifact
+are excluded from the per-row regression flags. Artifacts predating the
+tag (no `contended_rows` field) get the r12 heuristic: replay rows are
+treated as contended when the artifact records replay_concurrency > 1.
+
+The headline changed with it: `value` is now ops_sec + replay_solo_sec
+(the replay rows' solo sum); an old record's `value` was ops_sec plus the
+contended tier's wall. For an old record, replay_solo_sec is the sum of
+its per-row `replay_solo` map when that tier ran.
 
 Usage:
   tools/bench_diff.py OLD.json NEW.json [--threshold 1.5]
   tools/bench_diff.py --history bench_history.jsonl   # last two entries
 
 Exit 1 when any non-contended row regresses past the threshold AND both
-runs are canary-quiet (a loaded window is environment, not plan — the
-canary gate's whole point).
+runs are labeled quiet (a loaded window is environment, not plan).
 """
 import argparse
 import json
@@ -35,6 +40,18 @@ def contended_rows(art):
         return {k for k in art.get("queries", {})
                 if k.startswith("st_stream_") or k.startswith("dd_stream_")}
     return set()
+
+
+def headline(art, field):
+    """A headline figure; an old record's replay_solo_sec is the sum of its
+    per-row solo tier (absent when that tier was skipped)."""
+    if field == "replay_solo_sec" and field not in art and art.get("replay_solo"):
+        return sum(art["replay_solo"].values())
+    return art.get(field)
+
+
+def fmt(x):
+    return "n/a" if x is None else f"{x:.1f}"
 
 
 def main():
@@ -58,13 +75,16 @@ def main():
 
     qo, qn = old.get("queries", {}), new.get("queries", {})
     cont = contended_rows(new) | contended_rows(old)
-    both_quiet = (old.get("record_quality") == "quiet"
+    # per-row times at different core counts or hosts are not a regression
+    # signal, whatever their labels
+    same_host = old.get("host_fp") == new.get("host_fp")
+    both_quiet = (same_host and old.get("record_quality") == "quiet"
                   and new.get("record_quality") == "quiet")
     # two quiet-gated runs can still sit at different host-noise levels
     # (r12's final re-run: canary 0.115 -> 0.162, median row ratio 1.21,
-    # zero real regressions) — normalize per-row ratios by the canary
+    # zero real regressions) — normalize per-row ratios by the host-probe
     # ratio so a global noise shift doesn't flag every row
-    ca, cb = old.get("canary_mean", -1), new.get("canary_mean", -1)
+    ca, cb = old.get("host_canary_mean"), new.get("host_canary_mean")
     noise = cb / ca if (ca and cb and ca > 0 and cb > 0) else 1.0
     noise = max(noise, 1.0)  # only ever EXCUSE slowdowns, never speedups
 
@@ -83,15 +103,20 @@ def main():
         if flag or tag or ratio >= args.threshold or ratio <= 1 / args.threshold:
             print(f"{k:34s} {a:8.3f} {b:8.3f} {ratio:6.2f}{tag}{flag}")
     if noise > 1.0:
-        print(f"-- canary noise ratio {noise:.2f}: per-row flag threshold "
+        print(f"-- host-probe noise ratio {noise:.2f}: per-row flag threshold "
               f"scaled to {args.threshold * noise:.2f}x")
 
-    for field in ("ops_sec", "replay_wall_sec", "value"):
-        a, b = old.get(field), new.get(field)
-        if a and b:
-            print(f"-- {field}: {a:.1f} -> {b:.1f} ({b / a:.2f}x)")
-    print(f"-- canary: {old.get('canary_mean')} -> {new.get('canary_mean')}"
-          f" | quality: {old.get('record_quality')} -> {new.get('record_quality')}")
+    for field in ("ops_sec", "replay_solo_sec", "value"):
+        a, b = headline(old, field), headline(new, field)
+        ratio = f" ({b / a:.2f}x)" if a and b else ""
+        print(f"-- {field}: {fmt(a)} -> {fmt(b)}{ratio}")
+    if "contended_rows" in old and "contended_rows" not in new:
+        print("-- value definition changed: old = ops_sec + contended replay "
+              "wall, new = ops_sec + replay_solo_sec")
+    print(f"-- host probe: {old.get('host_canary_mean')} -> "
+          f"{new.get('host_canary_mean')} | quality: "
+          f"{old.get('record_quality')} -> {new.get('record_quality')}"
+          f" | host: {old.get('host_fp')} -> {new.get('host_fp')}")
     print(f"-- contended rows excluded from per-row flags: {len(cont)}")
 
     if regressions:
