@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.{GraftExtensions, GraftOptimizations}
 
+import graft.fs.LocalIo
+
 /** The one place an engine session is configured, as dcafs configures
   * everything from one settings.xml read at boot. Every entry point
   * (Bench, Verify, DumpPlans, the tools, GraftApp) and the test suite
@@ -23,11 +25,13 @@ object EngineSession {
   private val ShjLocalMapBytes = 64L * 1024 * 1024
 
   /** Build a session with the graft dialect (`GraftExtensions`: pow
-    * rewrite, native join strategies, graft SQL functions), the fork-free
-    * local checkpoint writer, the batch conf every entry point shares,
-    * then `conf` (which may override it). Extensions apply only when
-    * `getOrCreate` creates the session, so joining a session that was
-    * built without them is an error, not a silent change of plans.
+    * rewrite, native join strategies, graft SQL functions), fork-free
+    * local I/O for every session on its SparkContext (`graft.fs.LocalIo`,
+    * bound as `spark.hadoop.*` conf), the batch conf every entry point
+    * shares, then `conf` (which may override any of it).
+    * Extensions apply only when `getOrCreate` creates the session, so
+    * joining a session that was built without them is an error, not a
+    * silent change of plans.
     * It leaves streaming conf at Spark's defaults: a deployment (GraftApp)
     * keeps no-data micro-batches on, which idle alerts need, and each
     * replay row sets its own at start (`FileReplay.start`).
@@ -41,8 +45,6 @@ object EngineSession {
     val b = SparkSession.builder()
       .withExtensions(new GraftExtensions)
       .master(master)
-      .config(GraftOptimizations.CheckpointManagerKey,
-        GraftOptimizations.CheckpointManager)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       // the batch tools serve no web UI; GraftApp turns it back on
@@ -70,11 +72,15 @@ object EngineSession {
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         ShjLocalMapBytes.toString)
+    LocalIo.Binding.foreach { case (k, v) => b.config(s"spark.hadoop.$k", v) }
     sys.env.get("SPARK_GRAFT_JARS").foreach(j => b.config("spark.jars", j))
     sys.env.get("SPARK_GRAFT_EXECUTOR_MEM")
       .foreach(m => b.config("spark.executor.memory", m))
     conf.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
+    // a `file:` FileSystem cached in this JVM before the context existed
+    // would otherwise serve every session
+    LocalIo.serveConfiguredFs(spark.sparkContext.hadoopConfiguration)
     require(GraftOptimizations.installed(spark), "EngineSession.create " +
       "joined a session built without the graft dialect; build it first")
     spark

@@ -36,9 +36,9 @@ object FileReplay {
 
   private final case class Staged(
       root: Path, chunks: Map[Int, Path], schema: StructType,
-      // live-handle pin count: the bench replay tier runs rows
-      // CONCURRENTLY since round 12, so eviction must never delete files
-      // a not-yet-closed handle still links/copies from (publish of a
+      // live-handle pin count: concurrent callers (the console, GraftApp)
+      // can replay rows at once, so eviction must never delete files a
+      // not-yet-closed handle still links/copies from (publish of a
       // not-yet-linked chunk would otherwise throw NoSuchFile mid-replay)
       refs: java.util.concurrent.atomic.AtomicInteger =
         new java.util.concurrent.atomic.AtomicInteger(0))
@@ -84,9 +84,9 @@ object FileReplay {
     val annotated = df.withColumn("__chunk", chunkCol)
     val key = (annotated.queryExecution.analyzed.canonicalized,
       annotated.schema.sql)
-    // cache check under the lock; the distributed WRITE outside it — the
-    // round-12 concurrent replay tier must not serialize whole stagings
-    // behind one object monitor. Two threads staging the same key race
+    // cache check under the lock; the distributed WRITE outside it —
+    // concurrent callers must not serialize whole stagings behind one
+    // object monitor. Two threads staging the same key race
     // benignly: the loser's files are deleted, the winner's entry is
     // shared (pinned before the lock releases, so eviction can't reclaim
     // it in the gap).
@@ -235,7 +235,7 @@ object FileReplay {
       feed: StreamingQuery => Unit): DataFrame = {
     val spark = sdf.sparkSession
     val out = Files.createTempDirectory("graft_psink")
-    psinks.synchronized { psinkSeq += 1; psinks += ((psinkSeq, out)) }
+    psinks.synchronized { psinks += out }
     val q = start(spark, shufflePartitions) {
       sdf.writeStream.format("parquet")
         .option("path", s"$out/data")
@@ -302,19 +302,8 @@ object FileReplay {
   // every frame built from the dirs has been fully consumed (Bench: after
   // each replay row has been counted and fingerprinted; Verify: after
   // each row's parquet write). A JVM shutdown hook covers
-  // every other exit path. Entries carry a creation epoch so a purge can
-  // be scoped to "dirs that existed at my mark" — a concurrent caller's
-  // fresher dirs (whose frames may still be lazily consumed) survive
-  // (round-14 ADVICE: the unconditional global clear rested on call-site
-  // discipline alone).
-  private val psinks =
-    scala.collection.mutable.ArrayBuffer.empty[(Long, Path)]
-  private var psinkSeq = 0L
-
-  /** Creation-order mark for [[purgePsinks]]: dirs created strictly after
-    * the mark was taken are left alone by `purgePsinks(mark)`.
-    */
-  def psinkMark(): Long = psinks.synchronized { psinkSeq }
+  // every other exit path.
+  private val psinks = scala.collection.mutable.ArrayBuffer.empty[Path]
 
   /** Test hook: the psink dirs currently tracked by THIS JVM. Lets the
     * reclaim spec assert on the specific dirs it created instead of a
@@ -322,17 +311,14 @@ object FileReplay {
     * (round-14 ADVICE).
     */
   private[graft] def trackedPsinks: Seq[Path] =
-    psinks.synchronized { psinks.map(_._2).toSeq }
+    psinks.synchronized { psinks.toSeq }
 
-  /** Delete psink dirs created at or before `mark` (default: everything
-    * so far). Only call when no DataFrame returned by [[replayToParquet]]
-    * for those dirs will be consumed again.
+  /** Delete every tracked psink dir. Only call when no DataFrame returned
+    * by [[replayToParquet]] so far will be consumed again.
     */
-  def purgePsinks(mark: Long = Long.MaxValue): Unit = psinks.synchronized {
-    val (dead, live) = psinks.partition(_._1 <= mark)
-    dead.foreach { case (_, p) => try rm(p) catch { case _: Throwable => } }
+  def purgePsinks(): Unit = psinks.synchronized {
+    psinks.foreach(p => try rm(p) catch { case _: Throwable => })
     psinks.clear()
-    psinks ++= live
   }
 
   private val psinkShutdownHook: Thread = {

@@ -10,18 +10,22 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 
 /** Spark's checkpoint file manager with java.nio writes for local paths,
-  * bound through `spark.sql.streaming.checkpointFileManagerClass` (see
-  * `EngineSession.create`). Without Hadoop's native library every
-  * local file Spark creates forks `chmod` twice (file and `.crc`), which
-  * made the offset log, commit log and each state-store delta cost tens
-  * of ms a file; here a write is a temp file plus one atomic rename.
+  * bound once per SparkContext through
+  * `spark.sql.streaming.checkpointFileManagerClass` on its Hadoop
+  * configuration (`graft.fs.LocalIo`), so every session on the context
+  * and every `newSession()` child uses it unless its own conf names
+  * another manager. Spark's default manager writes through FileContext,
+  * whose local filesystem forks `chmod` twice (file and `.crc`) per file
+  * without Hadoop's native library, which made the offset log, commit log
+  * and each state-store delta cost tens of ms a file; here a write is a
+  * temp file plus one atomic rename.
   *
-  * Only `createAtomic` and `mkdirs` on `file:` paths change; reads,
-  * listings, deletes and every other scheme go to Spark's FileContext
-  * manager. No `.crc` is written, and a stale one is removed on
-  * overwrite, so checkpoints stay readable by the default manager (and
-  * checkpoints it wrote stay readable here). Like Hadoop's local stream,
-  * nothing is fsynced.
+  * Only `createAtomic`, `mkdirs` and `createCheckpointDirectory` on
+  * `file:` paths change; reads, listings, deletes and every other scheme
+  * go to Spark's FileContext manager. No `.crc` is written, and a stale
+  * one is removed on overwrite, so checkpoints stay readable by the
+  * default manager (and checkpoints it wrote stay readable here). Like
+  * Hadoop's local stream, nothing is fsynced.
   */
 class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends FileContextBasedCheckpointFileManager(path, hadoopConf) {
@@ -42,6 +46,14 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
   override def mkdirs(p: Path): Unit = localFile(p) match {
     case Some(dir) => Files.createDirectories(dir)
     case None => super.mkdirs(p)
+  }
+
+  /** The query's checkpoint root, which Spark creates through here when
+    * the query starts.
+    */
+  override def createCheckpointDirectory(): Path = {
+    mkdirs(path)
+    fc.makeQualified(path)
   }
 }
 

@@ -51,13 +51,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftOptimizations {
-  /** Bound by `EngineSession.create` (builder conf, so every child
-    * session inherits it) and by [[install]]: Spark's default checkpoint
-    * manager forks `chmod` per local file without Hadoop's native library.
-    */
-  val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
-  val CheckpointManager: String =
-    classOf[graft.streaming.LocalCheckpointFileManager].getName
 
   /** Whether `spark` plans with the graft dialect, from the extension or
     * from [[install]].
@@ -77,8 +70,11 @@ object GraftOptimizations {
   /** The dialect for a session built outside the engine, without the
     * extension: adds the rules to `spark.experimental` (which its
     * `newSession()` children do not inherit) unless [[installed]] already
-    * holds, and binds the fork-free checkpoint manager unless the caller
-    * chose one. Nothing in the engine calls it.
+    * holds, and binds fork-free local I/O (`graft.fs.LocalIo`) on the
+    * SparkContext's Hadoop configuration, keeping any key the caller set
+    * there, so every session on the context, `newSession()` children
+    * included, writes local files and checkpoints without forking.
+    * Nothing in the engine calls it.
     */
   def install(spark: SparkSession): Unit = {
     if (!installed(spark)) {
@@ -87,7 +83,6 @@ object GraftOptimizations {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy :+ LshSelfJoinStrategy
     }
-    if (spark.conf.getOption(CheckpointManagerKey).isEmpty)
-      spark.conf.set(CheckpointManagerKey, CheckpointManager)
+    graft.fs.LocalIo.bind(spark.sparkContext.hadoopConfiguration)
   }
 }

@@ -80,12 +80,10 @@ class FileReplaySpec extends AnyFunSuite {
     assert(mine.nonEmpty, "replayToParquet should have tracked a psink dir")
     assert(mine.forall(java.nio.file.Files.isDirectory(_)),
       "tracked psink dirs should exist before the purge")
-    // mark-scoped purge: dirs created after the mark must survive
-    val mark = graft.streaming.FileReplay.psinkMark()
-    graft.streaming.FileReplay.purgePsinks(mark)
+    graft.streaming.FileReplay.purgePsinks()
     assert(mine.forall(!java.nio.file.Files.exists(_)),
-      "purgePsinks must delete every psink dir tracked at the mark")
+      "purgePsinks must delete every tracked psink dir")
     assert(graft.streaming.FileReplay.trackedPsinks.isEmpty,
-      "purge at the latest mark must empty this JVM's registry")
+      "purgePsinks must empty this JVM's registry")
   }
 }

@@ -104,6 +104,21 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     assert(read(default(d), target) == "new bytes")
   }
 
+  test("createCheckpointDirectory makes the same directories and path as the default manager") {
+    val d = dir()
+    val got = local(d.resolve("l/1/chk")).createCheckpointDirectory()
+    val want = default(d.resolve("d/1/chk")).createCheckpointDirectory()
+    assert(got.toString == want.toString.replace("/d/1/chk", "/l/1/chk"))
+    for (rel <- Seq("1", "1/chk")) {
+      val (mine, theirs) = (d.resolve(s"l/$rel"), d.resolve(s"d/$rel"))
+      assert(Files.isDirectory(mine), rel)
+      assert(Files.getPosixFilePermissions(mine) == Files.getPosixFilePermissions(theirs), rel)
+    }
+    val existing = d.resolve("l/1/chk")
+    assert(local(existing).createCheckpointDirectory() ==
+      default(existing).createCheckpointDirectory(), "an existing root")
+  }
+
   test("a stateful query on an installed session writes no Hadoop .crc sidecars") {
     val in = dir()
     val cp = dir()
@@ -120,9 +135,10 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("a mapGroupsWithState checkpoint restarts across managers with its state intact") {
-    // Spark's default: the key unset on a child of the test session
-    val plain = EngineSession.isolated(spark)
-    plain.conf.unset(ManagerKey)
+    // Spark's default, named on a child of the test session (unsetting
+    // the key there would fall back to the context's binding)
+    val plain = EngineSession.isolated(spark,
+      ManagerKey -> classOf[FileContextBasedCheckpointFileManager].getName)
     for ((first, second) <- Seq((plain, spark), (spark, plain))) {
       val in = dir()
       val cp = dir()

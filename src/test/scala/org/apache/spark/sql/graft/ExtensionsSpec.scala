@@ -14,19 +14,7 @@ import org.apache.spark.sql.classic.SparkSession
   * can't ship, and checks the entry points refuse a session without it.
   */
 class ExtensionsSpec extends AnyFunSuite {
-  private def engine = graft.SparkTestSession.spark.asInstanceOf[SparkSession]
-
-  /** A session on the test context, sharing its state, built without the
-    * dialect (the shared test session is left as it is). The constructor
-    * that takes the shared state and the extensions is Scala-private, so
-    * it is reached reflectively; the public one would start a second
-    * SharedState with its own listeners on the test context.
-    */
-  private def plain(): SparkSession =
-    classOf[SparkSession].getConstructors.find(_.getParameterCount == 6).get
-      .newInstance(engine.sparkContext, Some(engine.sharedState), None,
-        new SparkSessionExtensions, Map.empty, Map.empty)
-      .asInstanceOf[SparkSession]
+  import ExtensionsSpec._
 
   test("GraftExtensions injects PowToMultiply and AsOfJoinStrategy") {
     val e = new SparkSessionExtensions
@@ -48,8 +36,8 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(s.experimental.extraOptimizations.count(_ == PowToMultiply) == 1)
     assert(s.experimental.extraStrategies.count(_ == AsOfJoinStrategy) == 1)
     assert(s.experimental.extraStrategies.count(_ == LshSelfJoinStrategy) == 1)
-    assert(s.conf.get(GraftOptimizations.CheckpointManagerKey) ==
-      GraftOptimizations.CheckpointManager)
+    assert(s.sessionState.newHadoopConf().get(graft.fs.LocalIo.CheckpointManagerKey) ==
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
     GraftOptimizations.install(engine)
     assert(engine.experimental.extraOptimizations.isEmpty)
     assert(engine.experimental.extraStrategies.isEmpty)
@@ -74,4 +62,20 @@ class ExtensionsSpec extends AnyFunSuite {
     }
     assert(s.experimental.extraStrategies.isEmpty, "the refusal must not install")
   }
+}
+
+object ExtensionsSpec {
+  def engine: SparkSession = graft.SparkTestSession.spark.asInstanceOf[SparkSession]
+
+  /** A session on the test context, sharing its state, built without the
+    * dialect (the shared test session is left as it is). The constructor
+    * that takes the shared state and the extensions is Scala-private, so
+    * it is reached reflectively; the public one would start a second
+    * SharedState with its own listeners on the test context.
+    */
+  def plain(): SparkSession =
+    classOf[SparkSession].getConstructors.find(_.getParameterCount == 6).get
+      .newInstance(engine.sparkContext, Some(engine.sharedState), None,
+        new SparkSessionExtensions, Map.empty, Map.empty)
+      .asInstanceOf[SparkSession]
 }
