@@ -520,13 +520,17 @@ object LineSinks {
 
   /** K1-K3 JDBC batch sink: micro-batch append via foreachBatch; the
     * trigger interval plays the role of the reference's flush `maxAge`,
-    * JDBC batchsize of `batchsize` (SQLDB.java:481-509).
+    * JDBC batchsize of `batchsize` (SQLDB.java:481-509). The sink writes
+    * with its own copy of `props`: sinks sharing one `Properties` each
+    * keep their own batch size, and the caller's object is not changed.
     */
   def jdbc(df: DataFrame, url: String, table: String,
       batchSize: Int = 500, props: java.util.Properties = new java.util.Properties()) = {
-    props.setProperty("batchsize", batchSize.toString)
+    val own = new java.util.Properties()
+    own.putAll(props)
+    own.setProperty("batchsize", batchSize.toString)
     df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      batch.write.mode("append").jdbc(url, table, props)
+      batch.write.mode("append").jdbc(url, table, own)
     }
   }
 

@@ -36,22 +36,6 @@ object TextOps {
   def shingles(toks: Column, n: Int): Column =
     graft.functions.GraftFunctions.shingles(toks, lit(n))
 
-  /** k-element MinHash signature: per seed, the lexicographic min of
-    * md5(seed || ":" || shingle). String-min keeps the oracle dialect
-    * trivially identical (no 64-bit hex-int casts needed).
-    */
-  def minhashSignature(shingleCol: Column, k: Int): Column =
-    array((0 until k).map { seed =>
-      array_min(transform(shingleCol, x => md5(concat(lit(s"$seed:"), x))))
-    }: _*)
-
-  /** LSH band hash: md5 of the band's signature rows (rowsPerBand
-    * consecutive signature entries).
-    */
-  def bandHash(sig: Column, band: Int, rowsPerBand: Int): Column =
-    md5(concat((0 until rowsPerBand).map(r =>
-      element_at(sig, band * rowsPerBand + r + 1)): _*))
-
   /** Exact Jaccard similarity of two string arrays (set semantics). */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
@@ -1857,23 +1841,6 @@ object VectorOps {
       .limit(n)
       .as[(Long, Array[Float])]
       .collect()
-  }
-
-  /** Deterministic centroid sample: the first nCentroids vectors by id.
-    * (Kept as the zero-training fallback; [[trainCentroids]] is the
-    * refined path used by the registered IVF query.)
-    */
-  def sampleCentroids(vectors: DataFrame, idCol: String, vecCol: String,
-      nCentroids: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // orderBy+limit plans as TakeOrdered (per-partition top-k, no global
-    // sort); the single-partition window then only ever sees the
-    // nCentroids sampled rows, never the corpus
-    vectors
-      .orderBy(col(idCol))
-      .limit(nCentroids)
-      .withColumn("cid", row_number().over(Window.orderBy(col(idCol))) - 1)
-      .select(col("cid"), col(vecCol).as("cvec"))
   }
 
   /** IVF probe: search only the nProbe buckets whose centroids are

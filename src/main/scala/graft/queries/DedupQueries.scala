@@ -2376,10 +2376,10 @@ object DedupQueries {
         |    row_number() OVER (PARTITION BY label ORDER BY sd, vec_id) AS rn
         |  FROM sums) t WHERE rn = 1""".stripMargin) { (s, dir) =>
       val e = Tables.load(s, dir, "embeddings")
-      // bounded sample stride (one cheap count — the same measured
-      // dispatch knnGraph uses): 4 at the verification scales, growing
-      // with the corpus so the sampled block never exceeds ~2k vectors
-      val total = e.count()
+      // bounded sample stride (the table's row count, counted once per
+      // fixture file): 4 at the verification scales, growing with the
+      // corpus so the sampled block never exceeds ~2k vectors
+      val total = Tables.rowCount(s, dir, "embeddings")
       val step = math.max(4L, 4L * ((total + 8191) / 8192))
       val m = e
         .filter(col("vec_id") % step === 0)

@@ -3122,14 +3122,15 @@ object Relational {
     */
   private def copurchaseEdges(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.load(s, dir, "lineitem").select("l_orderkey", "l_partkey")
-    // minsup stays a DRIVER-side count: round-15 tried folding it in-plan
-    // as a broadcast scalar (one less sequential job per graph row) and
-    // the full board rejected it — the one-row cross join renders as a
+    // minsup stays a DRIVER-side literal from the orders row count
+    // (counted once per fixture file by Tables): round-15 tried folding
+    // it in-plan as a broadcast scalar (one less sequential job per
+    // graph row) and the full board rejected it — the one-row cross join renders as a
     // BroadcastNestedLoopJoin replicated into every consumer of the edge
     // subtree and destroys the filter's selectivity estimate
     // (q_triangles 0.86 -> 12.99 s in the closing record). The literal
     // threshold keeps the aggregate+filter a single well-estimated stage.
-    val minsup = math.max(2L, Tables.load(s, dir, "orders").count() / 75000L)
+    val minsup = math.max(2L, Tables.rowCount(s, dir, "orders") / 75000L)
     li.as("l1").join(li.as("l2"),
         col("l1.l_orderkey") === col("l2.l_orderkey") &&
           col("l1.l_partkey") < col("l2.l_partkey"))
